@@ -99,6 +99,10 @@ def _normalize_hostname(hostname: str) -> str:
 
 
 def _normalize_path(path: str) -> str:
+    # collapse empty segments BEFORE resolving "..": the join below drops
+    # them anyway, and left in place "//../" hides its ".." from the
+    # resolver until a second pass (normalize_url must be idempotent)
+    path = re.sub(r"/{2,}", "/", path)
     while True:
         m = _RELATIVE_PATH_RE.search(path)
         if not m:

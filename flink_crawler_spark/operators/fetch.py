@@ -95,10 +95,13 @@ def mock_fetch(
     """
     # r13 (guide §1.2): this runs every crawl tick — build the output
     # projection as ONE selectExpr call (SQL strings parsed JVM-side)
-    # instead of ~40 py4j Column round-trips per tick. The frontier and
-    # pages sides share no column names (pages carries page_url /
-    # page_score / html|content|content_type), so bare names resolve
-    # unambiguously after the join.
+    # instead of ~40 py4j Column round-trips per tick. Bare names resolve
+    # unambiguously after the join only while the two sides share no
+    # column name (pages carries page_url / page_score /
+    # html|content|content_type) — checked, not assumed.
+    shared = set(frontier.columns) & set(pages.columns)
+    if shared:
+        raise ValueError(f"pages shares column names with the frontier: {sorted(shared)}")
     content_sql = (
         "content" if "content" in pages.columns else "encode(html, 'UTF-8')"
     )

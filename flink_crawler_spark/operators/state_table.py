@@ -19,31 +19,62 @@ Pick ``buckets`` so one bucket ~ a few GB at target scale (e.g. 16384
 buckets for a 30 TB state table); the bucket count is a physical-layout
 constant the table keeps for life, so size it for the END state of the
 crawl, not the seed list.
+
+Next to the table's location sits its LOG directory ``<location>__log``
+(next to, not inside: the crash-safe swap renames the table, and a
+rename moves the table's own directory). It holds plain parquet
+directories of merged observations, found by listing it through the
+Hadoop FileSystem of its URI (local, HDFS, S3A — no catalog entries):
+
+  * ``t<N>`` — the delta of log-mode tick N (``tick_append_log``)
+  * ``seeds_t<N>`` — a seed micro-batch pending for tick N
+    (``stage_pending_seeds``), where N is the marker + 1 at ingest
+
+The table's ``crawl.tick`` property is the authoritative marker and
+``crawl.base_tick`` says which tick the base table holds. A read folds
+the deltas in (base_tick, marker] into the base; the live view (no
+``at_tick``) also folds the seeds pending for marker + 1. Anything else
+is ignored: a delta past the marker is an orphan of a crash between its
+write and the marker flip (re-running that tick overwrites it), and
+seeds at or below the marker were absorbed by the tick that reached
+them (log mode writes them into that tick's delta, rewrite mode folds
+them through its swap). Compaction folds the committed deltas — never
+the pending seeds — into the base and sweeps every entry at or below
+the new base tick; a rewrite swap sweeps the whole log, which the new
+base holds; a table (re)created by ``save_bucketed_state`` starts with
+an empty log, so it never reads a dropped namesake's files.
 """
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import DataFrame, SparkSession
+
+_ENTRY_RE = re.compile(r"(?:seeds_)?t(\d+)")
+
+
+def _write_bucketed(state: DataFrame, table: str, buckets: int) -> None:
+    state.write.mode("overwrite").bucketBy(buckets, "url").sortBy("url").format(
+        "parquet"
+    ).saveAsTable(table)
 
 
 def save_bucketed_state(state: DataFrame, table: str, *, buckets: int = 64) -> None:
-    """Persist the crawl state as a bucketed+sorted catalog table."""
-    (
-        state.write.mode("overwrite")
-        .bucketBy(buckets, "url")
-        .sortBy("url")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    """Persist the crawl state as a bucketed+sorted catalog table, with
+    an empty log (files a dropped table of the same name left behind
+    are swept)."""
+    _write_bucketed(state, table, buckets)
+    _sweep(state.sparkSession, _meta(state.sparkSession, table)[1])
 
 
 def load_bucketed_state(spark: SparkSession, table: str) -> DataFrame:
     """Read the bucketed state; scans report HashPartitioning(url, n) so
     downstream key-aligned joins/aggregations skip their Exchange.
 
-    Recovery: if a tick crashed between the two renames in
-    ``tick_merge_bucketed``, the previous state survives as
-    ``<table>__old`` — restore it."""
+    Recovery: if a tick crashed between the two renames of the swap,
+    the previous state survives as ``<table>__old`` — restore it."""
     if not spark.catalog.tableExists(table) and spark.catalog.tableExists(f"{table}__old"):
         spark.sql(f"ALTER TABLE {table}__old RENAME TO {table}")
         # the rename can leave a cached relation with a stale file
@@ -52,9 +83,63 @@ def load_bucketed_state(spark: SparkSession, table: str) -> DataFrame:
     # NOTE: no unconditional refreshTable here — refreshing cascades an
     # eviction through every cached frame that references the table,
     # which would wipe the crawl tick's persisted caches on each merge
-    # read. The swap paths (tick_merge_bucketed / compact_state_log)
-    # refresh explicitly after their renames instead.
+    # read. The swap refreshes explicitly after its renames instead.
     return spark.table(table)
+
+
+def _meta(spark: SparkSession, table: str) -> tuple[dict, str]:
+    """(table properties, log directory) from one catalog lookup."""
+    d = json.loads(spark.sql(f"DESCRIBE TABLE EXTENDED {table} AS JSON").collect()[0][0])
+    return d.get("table_properties", {}), d["location"] + "__log"
+
+
+def _ls(spark: SparkSession, log: str):
+    """(FileSystem, {entry name: Hadoop Path}) of a log directory."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(log)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return fs, {}
+    return fs, {s.getPath().getName(): s.getPath() for s in fs.listStatus(root)}
+
+
+def _sweep(spark: SparkSession, log: str, up_to: int | None = None) -> None:
+    """Delete the log entries of ticks <= up_to (None: every entry)."""
+    fs, entries = _ls(spark, log)
+    for name, path in entries.items():
+        m = _ENTRY_RE.fullmatch(name)
+        if up_to is None or (m and int(m.group(1)) <= up_to):
+            fs.delete(path, True)
+
+
+def _read_obs(spark: SparkSession, paths: list[str]) -> DataFrame:
+    # one path per directory and the known observation schema: no
+    # inference job, and no parallel-listing job below the 32-path
+    # discovery threshold
+    from ..streaming.url_db import OBS_SCHEMA
+
+    return spark.read.schema(OBS_SCHEMA).parquet(*paths)
+
+
+def _set_props(spark: SparkSession, table: str, props: dict) -> None:
+    kv = ", ".join(f"'{k}'='{int(v)}'" for k, v in props.items() if v is not None)
+    if kv:
+        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
+
+
+def _swap(spark: SparkSession, table: str, merged: DataFrame, buckets: int, props: dict) -> None:
+    """Crash-safe replace: write a staging table and stamp its markers
+    BEFORE the renames (saveAsTable creates it propertyless, so the data
+    and its markers move together), rename the old state aside
+    (recoverable), swap, then drop the backup. A crash in any window
+    leaves <table> or <table>__old — load_bucketed_state restores."""
+    staging, old = f"{table}__staging", f"{table}__old"
+    _write_bucketed(merged, staging, buckets)
+    _set_props(spark, staging, props)
+    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
+    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    spark.catalog.refreshTable(table)  # drop the pre-swap file listing
 
 
 def tick_merge_bucketed(
@@ -67,52 +152,30 @@ def tick_merge_bucketed(
     tick: int | None = None,
     now_ms: int | None = None,
 ) -> DataFrame:
-    """One durable tick: join-merge the delta into the bucketed table and
-    crash-safely replace it (write to a staging table, rename the old
-    state aside, swap, drop the backup — every crash window leaves a
-    recoverable table). Returns the new state frame.
+    """One durable tick: join-merge the delta into the live view and
+    crash-safely swap the result in as the new base. Returns the new
+    state frame.
 
     ``merged_transform`` (optional) decorates the merged frame before the
     write — the crawl loop uses it to attach ``df.observe`` status
     counters so per-tick metrics ride the state write job instead of
     costing a second action.
 
-    ``tick`` (optional) is stamped as the ``crawl.tick`` property on the
-    STAGING table BEFORE the swap: saveAsTable creates the staging table
-    without properties, so stamping after the swap would leave a crash
-    window in which the new state resumes at tick 0 (regressed now_ms,
-    wrong politeness windows). Stamped-before-rename, the property and
-    the data move atomically together."""
+    ``tick`` (optional) is stamped as the marker AND the base tick on the
+    staging table before the swap, so a crash can never pair the new
+    state with a stale (or tick-0) counter. Without it the new table
+    carries no markers: the counter resets to 0."""
     from .merge import merge_updates_join
 
-    # read the LOG VIEW, not just the base: a table previously run in
-    # log mode may carry committed-but-uncompacted delta ticks — merging
-    # from the bare base would silently drop them. With no pending
-    # deltas this is exactly the base scan.
-    state = read_state_log(spark, table)
+    # the LIVE view, not just the base: committed-but-uncompacted deltas
+    # and pending seeds fold in here (with neither, this IS the base scan)
+    state, _, log = _view(spark, table)
     merged = merge_updates_join(state, updates)
     if merged_transform is not None:
         merged = merged_transform(merged)
-    staging = f"{table}__staging"
-    save_bucketed_state(merged, staging, buckets=buckets)
-    if tick is not None:
-        set_state_tick(spark, staging, tick, now_ms=now_ms)
-        # the swap folds any pending deltas too — advance the base marker
-        spark.sql(
-            f"ALTER TABLE {staging} SET TBLPROPERTIES ('crawl.base_tick'='{int(tick)}')"
-        )
-    # crash-safe swap: the old state is renamed aside (recoverable) before
-    # the staging table takes the name; only then is the backup dropped.
-    # A crash in any window leaves either <table> or <table>__old existing
-    # — load_bucketed_state restores from __old automatically.
-    old = f"{table}__old"
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.catalog.refreshTable(table)  # drop the pre-swap file listing
-    if tick is not None:
-        _sweep_deltas(spark, table, up_to=tick)
+    props = {} if tick is None else {"crawl.tick": tick, "crawl.now_ms": now_ms, "crawl.base_tick": tick}
+    _swap(spark, table, merged, buckets, props)
+    _sweep(spark, log)  # the new base holds everything the log held
     return load_bucketed_state(spark, table)
 
 
@@ -124,24 +187,17 @@ def set_state_tick(
     the right now_ms — including refetch-mode clock jumps, which a
     tick-count-derived clock would silently rewind (the batch-loop
     analogue of the reference's checkpointed iteration counter)."""
-    props = f"'crawl.tick'='{int(tick)}'"
-    if now_ms is not None:
-        props += f", 'crawl.now_ms'='{int(now_ms)}'"
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({props})")
+    _set_props(spark, table, {"crawl.tick": tick, "crawl.now_ms": now_ms})
 
 
 def get_state_tick(spark: SparkSession, table: str) -> int:
     """Completed-tick number stored on the table; 0 when unset."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    return int(props.get("crawl.tick", 0))
+    return int(_meta(spark, table)[0].get("crawl.tick", 0))
 
 
 def get_state_now_ms(spark: SparkSession, table: str) -> int | None:
     """Persisted simulated clock; None when unset (pre-clock tables)."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    v = props.get("crawl.now_ms")
+    v = _meta(spark, table)[0].get("crawl.now_ms")
     return int(v) if v is not None else None
 
 
@@ -151,39 +207,28 @@ def get_state_now_ms(spark: SparkSession, table: str) -> int | None:
 #
 # tick_merge_bucketed keeps the merge COMPUTE delta-only but still
 # REWRITES the whole table every tick (plain parquet has no row-level
-# MERGE). The log backend removes that: each tick appends ONE small
-# bucketed delta table (`<table>__delta_t<N>`), reads view the state as
-# base ⋈ merge(deltas) — still a bucket-local join, both sides bucketed
-# by url — and every `compact_every` ticks the view is folded back into
-# the base with the same crash-safe swap. Per-tick write cost is
-# O(delta); the full rewrite is amortized 1/compact_every. This is the
-# LSM/merge-on-read layout Delta/Iceberg implement natively; on plain
-# parquet the per-tick delta TABLE (not append) keeps exactly-once:
-# the base's crawl.tick property is the authoritative marker, a crash
-# between delta-create and marker-set leaves an orphan delta that the
-# re-run of the same tick drops and recreates.
+# MERGE). The log backend removes that: each tick writes ONE small
+# plain-parquet delta directory, reads view the state as
+# base ⋈ merge(deltas) — a bucket-local join, the delta side shuffling
+# into it — and every `state_log_every` ticks the view is folded back
+# into the base with the same crash-safe swap. Per-tick write cost is
+# O(delta); the full rewrite is amortized 1/state_log_every. This is the
+# LSM/merge-on-read layout Delta/Iceberg implement natively, and the
+# per-batch state files plus periodic snapshots of Structured Streaming's
+# state store; exactly-once comes from the marker rule in the module
+# docstring (write the delta, then flip crawl.tick).
 
 
-def _sweep_deltas(spark: SparkSession, table: str, *, up_to: int) -> None:
-    """Drop every folded delta table (t <= up_to) by prefix listing, so
-    orphans from a crash between a swap and its drops are also swept."""
-    import re as _re
-
-    pref = f"{table}__delta_t"
-    # SHOW TABLES LIKE, not catalog.listTables(): the latter decodes
-    # every table's full metadata (and trips EXPRESSION_DECODING_FAILED
-    # on some temp-view mixes); the SQL listing returns bare names
-    for r in spark.sql(f"SHOW TABLES LIKE '{pref}*'").collect():
-        name = r["tableName"]
-        m = _re.fullmatch(_re.escape(pref) + r"(\d+)", name)
-        if m and int(m.group(1)) <= up_to:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def _base_tick(spark: SparkSession, table: str) -> int:
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    return int(props.get("crawl.base_tick", 0))
+def stage_pending_seeds(spark: SparkSession, table: str, seeds: DataFrame) -> int:
+    """Write merged seed observations as the seeds pending for the next
+    tick (marker + 1), replacing an earlier pending set for that tick —
+    a replayed micro-batch is idempotent. One pending set per marker:
+    commit a tick between two distinct batches. Returns the marker."""
+    load_bucketed_state(spark, table)  # restore from __old first
+    props, log = _meta(spark, table)
+    tick = int(props.get("crawl.tick", 0))
+    seeds.write.mode("overwrite").parquet(f"{log}/seeds_t{tick + 1}")
+    return tick
 
 
 def tick_append_log(
@@ -195,54 +240,55 @@ def tick_append_log(
     tick: int,
     now_ms: int | None = None,
 ) -> None:
-    """One log-mode tick: write this tick's pre-merged delta as its own
-    bucketed table, then flip the authoritative tick marker."""
-    from .merge import merge_crawl_state, OBS_COLS
+    """One log-mode tick: write this tick's pre-merged delta — the
+    updates plus any seeds pending for this tick — as the directory
+    ``t<tick>``, then flip the marker. Deltas are plain parquet (read
+    back shuffled into the merge), so ``buckets`` does not apply."""
+    from .merge import OBS_COLS, merge_crawl_state
 
-    delta = merge_crawl_state(updates.select(*OBS_COLS))
-    dt = f"{table}__delta_t{tick}"
-    # re-running a crashed tick replaces its orphan delta: exactly-once
-    spark.sql(f"DROP TABLE IF EXISTS {dt}")
-    save_bucketed_state(delta, dt, buckets=buckets)
+    _, log = _meta(spark, table)
+    obs = updates.select(*OBS_COLS)
+    if f"seeds_t{tick}" in _ls(spark, log)[1]:
+        obs = obs.unionByName(_read_obs(spark, [f"{log}/seeds_t{tick}"]))
+    # overwrite: re-running a crashed tick replaces its orphan delta
+    merge_crawl_state(obs).write.mode("overwrite").parquet(f"{log}/t{tick}")
     set_state_tick(spark, table, tick, now_ms=now_ms)
 
 
 def read_state_log(
     spark: SparkSession, table: str, *, at_tick: int | None = None
 ) -> DataFrame:
-    """The merged state view: base ⋈ merge(committed deltas). Lazy —
-    evaluated by whatever job consumes it (the crawl loop's frontier
-    scan). Orphan deltas past the marker are ignored.
+    """The merged state view: base ⋈ merge(committed deltas + pending
+    seeds). Lazy — evaluated by whatever job consumes it (the crawl
+    loop's frontier scan).
 
-    ``at_tick`` reads the state AS OF that tick (time travel): the base
-    holds everything up to ``crawl.base_tick``, so any tick between the
-    last compaction and the marker is reconstructable by folding only
-    the delta prefix — the free audit/debug dividend of the LSM layout
-    (what did the URL DB say before the tick that went wrong?).
-    History older than the base is compacted away: ``at_tick`` below
+    ``at_tick`` reads the COMMITTED state as of that tick (time travel;
+    pending seeds excluded): the base holds everything up to
+    ``crawl.base_tick``, so any tick between the last compaction and the
+    marker is reconstructable by folding only the delta prefix — what
+    did the URL DB say before the tick that went wrong? History older
+    than the base is compacted away: ``at_tick`` below
     ``crawl.base_tick`` raises, as does a tick past the marker. The
-    retention window is exactly ``state_log_every`` ticks — size it for
-    the audit horizon you want.
+    retention window is exactly ``state_log_every`` ticks.
 
-    All pending deltas fold through ONE delta-sized groupBy-merge and
+    All folded directories go through ONE delta-sized groupBy-merge and
     ONE bucket-local join with the base, so the per-scan cost is
-    O(state) + O(sum-of-deltas) regardless of how many ticks have
-    passed since the last compaction (the lattice is order- and
-    partitioning-independent — property-pinned in
-    test_merge_lattice_laws — so the k-way fold equals the pairwise
-    one). An earlier pairwise implementation chained one join per
-    pending delta: measured +~0.5 s/tick of read amplification PER
-    uncompacted tick (tools/state_log_ab.py). The deltas are read as
-    plain parquet FILES, not catalog tables: a Union of co-bucketed
-    table scans falsely advertises the children's HashPartitioning
-    while owning the concatenated partition count (zip crash /
-    missing-exchange hazard); file scans claim no partitioning, and the
-    tiny delta union then shuffles normally into the merge."""
-    from .merge import OBS_COLS, merge_crawl_state, merge_updates_join
+    O(state) + O(sum-of-deltas) however many ticks have passed since the
+    last compaction (the lattice is order- and partitioning-independent,
+    property-pinned in test_merge_lattice_laws). The deltas are file
+    scans, which claim no partitioning: the small union shuffles
+    normally into the merge."""
+    return _view(spark, table, at_tick)[0]
+
+
+def _view(spark: SparkSession, table: str, at_tick: int | None = None, seeds: bool = True):
+    """(state view, table properties, log directory); see read_state_log.
+    ``seeds=False`` leaves the pending seeds out."""
+    from .merge import merge_updates_join
 
     base = load_bucketed_state(spark, table)
-    b0 = _base_tick(spark, table)
-    tick = get_state_tick(spark, table)
+    props, log = _meta(spark, table)
+    b0, tick = int(props.get("crawl.base_tick", 0)), int(props.get("crawl.tick", 0))
     if at_tick is not None:
         if at_tick < b0:
             raise ValueError(
@@ -251,49 +297,32 @@ def read_state_log(
                 f"widen the retention window)"
             )
         if at_tick > tick:
-            raise ValueError(
-                f"at_tick={at_tick} is past the committed marker ({tick})"
-            )
-        tick = at_tick
-    files: list[str] = []
-    for t in range(b0 + 1, tick + 1):
-        dt = f"{table}__delta_t{t}"
-        if spark.catalog.tableExists(dt):
-            files.extend(spark.table(dt).inputFiles())
-    if not files:
-        return base
-    deltas = spark.read.parquet(*files).select(*OBS_COLS)
-    return merge_updates_join(base, merge_crawl_state(deltas))
+            raise ValueError(f"at_tick={at_tick} is past the committed marker ({tick})")
+        tick, seeds = at_tick, False
+    names = [f"t{t}" for t in range(b0 + 1, tick + 1)] + [f"seeds_t{tick + 1}"] * seeds
+    entries = _ls(spark, log)[1]
+    paths = [f"{log}/{n}" for n in names if n in entries]
+    view = merge_updates_join(base, _read_obs(spark, paths)) if paths else base
+    return view, props, log
 
 
 def compact_state_log(
     spark: SparkSession, table: str, *, buckets: int, merged_transform=None
 ) -> DataFrame:
     """Fold the committed deltas into the base with the crash-safe swap,
-    advance crawl.base_tick, and drop the folded delta tables."""
-    b0 = _base_tick(spark, table)
-    tick = get_state_tick(spark, table)
-    if tick <= b0:
-        return load_bucketed_state(spark, table)
-    merged = read_state_log(spark, table)
+    advance crawl.base_tick, and sweep the folded log entries. Seeds
+    pending for the next tick stay pending."""
+    merged, props, log = _view(spark, table, seeds=False)
+    tick = int(props.get("crawl.tick", 0))
+    if tick <= int(props.get("crawl.base_tick", 0)):
+        return merged  # nothing committed since the base: the view IS the base
     if merged_transform is not None:
         merged = merged_transform(merged)
-    staging = f"{table}__staging"
-    save_bucketed_state(merged, staging, buckets=buckets)
-    # carry ALL markers on the staging table so they swap with the data —
-    # including the persisted simulated clock: dropping crawl.now_ms here
-    # would rewind a refetch-mode crawl that stops on a compaction
-    # boundary to start_ms + tick*tick_ms, re-deriving its timer-sleep
-    # jumps (the regression the clock-persistence fix closed).
-    set_state_tick(spark, staging, tick, now_ms=get_state_now_ms(spark, table))
-    spark.sql(
-        f"ALTER TABLE {staging} SET TBLPROPERTIES ('crawl.base_tick'='{int(tick)}')"
-    )
-    old = f"{table}__old"
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.catalog.refreshTable(table)  # drop the pre-swap file listing
-    _sweep_deltas(spark, table, up_to=tick)
+    # carry ALL markers through the swap — including the persisted
+    # simulated clock: dropping crawl.now_ms here would rewind a
+    # refetch-mode crawl that stops on a compaction boundary to
+    # start_ms + tick*tick_ms, re-deriving its timer-sleep jumps
+    now_ms = props.get("crawl.now_ms")
+    _swap(spark, table, merged, buckets, {"crawl.tick": tick, "crawl.now_ms": now_ms, "crawl.base_tick": tick})
+    _sweep(spark, log, up_to=tick)
     return load_bucketed_state(spark, table)

@@ -28,6 +28,7 @@ DataFrame: (tick, operator, url).
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
 
@@ -147,6 +148,12 @@ class CrawlConfig:
     # accumulating it; eagerly materializing full parse every tick
     # defeats the pruned-projection hot path), on otherwise.
 
+    def __post_init__(self) -> None:
+        # the frontier inlines the threshold into SQL text, where inf/nan
+        # do not parse — reject them here, at the config surface
+        if not math.isfinite(self.min_fetch_score):
+            raise ValueError(f"min_fetch_score must be finite (got {self.min_fetch_score!r})")
+
 
 @dataclass
 class CrawlResult:
@@ -196,6 +203,26 @@ def seeds_to_state(clean: DataFrame, *, now_ms: int) -> DataFrame:
         "coalesce(score, CAST(1.0 AS DOUBLE)) AS score",
         f"CAST({int(now_ms)} AS BIGINT) AS next_fetch_time",
     )
+
+
+def _observed_count(obs, *, wait_s: float = 2.0) -> int | None:
+    """The first metric of a one-count Observation, or None when it has
+    not arrived within ``wait_s``. Never blocks without a deadline: the
+    metric is delivered by an asynchronous listener, and AQE's
+    empty-relation propagation can fold the CollectMetrics node out of
+    the executed plan (exactly when the frontier IS runtime-empty) — the
+    Observation then completes with a schemaless empty row, or never.
+    Not ``obs.get``: pyspark's toPyRow rejects that empty row, and the
+    JVM ``getRow`` waits forever on a metric that never fires.
+    ``getRowOrEmpty`` waits at most 100 ms per call."""
+    deadline = time.monotonic() + wait_s
+    while True:
+        opt = obs._jo.getRowOrEmpty()
+        if opt.isDefined():
+            row = opt.get()
+            return int(row.getLong(0)) if row.size() > 0 else None
+        if time.monotonic() >= deadline:
+            return None
 
 
 def _obs_counts(metrics: dict) -> dict:
@@ -842,19 +869,9 @@ def _crawl_body(
             # rode that job as a CollectMetrics observation (zero extra
             # actions); stats mode reads the cache with an exact count.
             if front_obs is not None:
-                # not front_obs.get: AQE's empty-relation propagation can
-                # fold the CollectMetrics node out of the executed plan
-                # (exactly when the frontier IS runtime-empty), and the
-                # Observation then completes with a schemaless empty row
-                # that pyspark's toPyRow rejects. Read the JVM row
-                # directly; an empty row means AQE proved some stage
-                # empty — verify with ONE cache read (terminal tick only,
-                # the cache is already materialized).
-                jrow = front_obs._jo.getRow()
-                if jrow is not None and jrow.size() > 0:
-                    n_frontier = int(jrow.getLong(0))
-                else:
-                    n_frontier = frontier.count()
+                # a row that is missing, empty or 0 is verified with ONE
+                # cache read (the cache is already materialized)
+                n_frontier = _observed_count(front_obs) or frontier.count()
             else:
                 n_frontier = frontier.count()
             _fold_tick_history()

@@ -76,6 +76,21 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- state-log rotation: the queries on a value path the plain-file
+    # state log changed — merge_updates_join as one SQL projection
+    # (bucketed_state_merge), the merge lattice's status priority as a
+    # SQL CASE (every merged_crawl_state consumer), and the crawl loop's
+    # bounded frontier-count read and mock_fetch column guard
+    # (crawl_reachability). Each was value-oracled at sf0.001 + sf0.01.
+    "bucketed_state_merge",       # merge_updates_join + the swap
+    "crawl_merge_lattice",        # merge_crawl_state priority CASE
+    "crawl_reachability",         # loop: bounded observation read
+    "frontier_topk",              # merged_crawl_state consumer
+    "frontier_domain_quota",      # merged_crawl_state consumer
+    "status_counts",              # merged_crawl_state consumer
+    "domain_avg_of_avgs",         # merged_crawl_state consumer
+    "frontier_fairness_gini",     # merged_crawl_state consumer
+    "frontier_refetch_due",       # merged_crawl_state consumer
     # --- r13 rotation (second OPTIMIZATION round; changed-queries-first
     # rule, then least-recently-windowed). Slots 1-16: every query whose
     # value-producing code path changed this round — the crawl-loop
@@ -85,8 +100,6 @@ PRIORITY_WINDOW = [
     # fusion and every consumer of the re-derived family sigs/pairs/
     # clusters memos. Each was individually value-oracled at sf0.001 +
     # sf0.01 when made; the window makes the driver re-prove them.
-    "crawl_reachability",         # loop: windows gone, selectExpr plans, obs count
-    "frontier_refetch_due",       # _eligible_expr parsed-SQL form
     "stupid_backoff_score",       # LOO tower: window-combined tables, 5 BHJ
     "curation_funnel",            # CC driver fold + fused minhash sigs
     "near_dup_clusters",          # CC driver fold

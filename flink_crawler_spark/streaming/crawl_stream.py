@@ -7,11 +7,12 @@ is the streaming shell around the identical per-tick batch logic
 (offset = file index, checkpointed by Spark), ``foreachBatch`` merges
 them into the durable state table and advances the crawl a few ticks.
 
-Exactly-once seed ingestion comes from the DataSource offset (replayed
-batches re-merge the same rows — idempotent for already-fetched URLs,
-and Spark's checkpoint prevents re-delivery in the first place), which
-is the reference's checkpointed read index (SeedUrlSource.java:153-166)
-reborn as stream offsets.
+Exactly-once seed ingestion comes from the DataSource offset (Spark's
+checkpoint prevents re-delivery), which is the reference's checkpointed
+read index (SeedUrlSource.java:153-166) reborn as stream offsets. A
+batch replayed before its first tick committed replaces its own pending
+seeds (table mode); a later replay re-merges the same rows, which is
+idempotent for already-fetched URLs.
 """
 
 from __future__ import annotations
@@ -79,45 +80,24 @@ def ingest_seeds_table(
     buckets: int = 64,
     single_domain: str | None = None,
 ) -> int:
-    """Merge a batch of (new) seed rows into the BUCKETED state table —
+    """Ingest a batch of (new) seed rows into the BUCKETED state table —
     the 100 TB deployment shape (streaming seed source + durable
-    bucketed URL DB). Returns the table's completed-tick counter, which
-    seed ingestion does not advance."""
-    from ..operators.state_table import (
-        get_state_now_ms,
-        get_state_tick,
-        load_bucketed_state,
-        save_bucketed_state,
-        set_state_tick,
-        tick_merge_bucketed,
-    )
+    bucketed URL DB). The batch's merged observations are written as the
+    seeds pending for the next tick (a delta-sized write, replaced on
+    replay; operators/state_table.py): the live state view folds them
+    in, and the next committed tick absorbs them, in log and rewrite
+    mode alike. Returns the table's completed-tick counter, which seed
+    ingestion does not advance."""
+    from ..operators.state_table import save_bucketed_state, set_state_tick, stage_pending_seeds
 
-    cleaned = clean_urls(seeds, single_domain=single_domain)
-    obs = seeds_to_state(cleaned, now_ms=now_ms)
-    exists = spark.catalog.tableExists(state_table) or spark.catalog.tableExists(
-        f"{state_table}__old"
+    obs = merge_crawl_state(
+        seeds_to_state(clean_urls(seeds, single_domain=single_domain), now_ms=now_ms)
     )
-    if not exists:
-        save_bucketed_state(merge_crawl_state(obs), state_table, buckets=buckets)
-        set_state_tick(spark, state_table, 0, now_ms=now_ms)
-        return 0
-    load_bucketed_state(spark, state_table)  # restore from __old if needed
-    tick = get_state_tick(spark, state_table)
-    stored_now = get_state_now_ms(spark, state_table)
-    # tick stamped on staging before the swap — the counter survives any
-    # crash window of the rename sequence. Carry the persisted clock
-    # through the swap too: a clockless stamp would strip crawl.now_ms
-    # from a refetch-enabled table on every seed micro-batch, rewinding
-    # its sleep-jumped clock before the batch's crawl() resume reads it.
-    tick_merge_bucketed(
-        spark,
-        state_table,
-        obs,
-        buckets=buckets,
-        tick=tick,
-        now_ms=stored_now if stored_now is not None else now_ms,
-    )
-    return tick
+    if spark.catalog.tableExists(state_table) or spark.catalog.tableExists(f"{state_table}__old"):
+        return stage_pending_seeds(spark, state_table, obs)
+    save_bucketed_state(obs, state_table, buckets=buckets)
+    set_state_tick(spark, state_table, 0, now_ms=now_ms)
+    return 0
 
 
 def continuous_crawl(

@@ -258,6 +258,7 @@ def test_crawl_loop_with_state_log_mode(spark, tmp_path):
     final state as the default loop, and a restarted crawl resumes from
     base+deltas."""
     import os
+    import re
 
     from flink_crawler_spark.operators.state_table import read_state_log
     from flink_crawler_spark.plans.crawl_loop import CrawlConfig, crawl
@@ -300,14 +301,12 @@ def test_crawl_loop_with_state_log_mode(spark, tmp_path):
 
         # the base table's data files were written at seed time or the
         # last compaction — NOT once per tick (the whole point): between
-        # compactions only __delta_t* tables appear
+        # compactions only t<N> delta directories appear in the table's
+        # log directory, next to its location
         warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        base_dir = os.path.join(warehouse, table)
-        # ticks since the last compaction live as delta tables
-        deltas = [
-            t_.name for t_ in spark.catalog.listTables()
-            if t_.name.startswith(f"{table}__delta_t")
-        ]
+        log_dir = os.path.join(warehouse, f"{table}__log")
+        # ticks since the last compaction live as delta directories
+        deltas = [d for d in os.listdir(log_dir) if re.fullmatch(r"t\d+", d)]
         last_compaction = (res.ticks // 3) * 3
         assert len(deltas) == res.ticks - last_compaction, (deltas, res.ticks)
 
@@ -403,3 +402,186 @@ def test_state_log_time_travel(spark, tmp_path):
         for t_ in list(spark.catalog.listTables()):
             if t_.name.startswith(table):
                 spark.sql(f"DROP TABLE IF EXISTS {t_.name}")
+
+
+# ---------------------------------------------------------------------------
+# The log layout: plain parquet delta and pending-seed directories next to
+# the table, the marker rule, the pending-seed rule, the sweeps
+# ---------------------------------------------------------------------------
+
+
+def _log_dir(spark, table):
+    import os
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return os.path.join(warehouse, f"{table}__log")
+
+
+def _fresh(spark, table, rows, *, tick=0):
+    from flink_crawler_spark.operators.state_table import (
+        save_bucketed_state,
+        set_state_tick,
+    )
+
+    _drop(spark, table)
+    save_bucketed_state(obs(spark, rows), table, buckets=4)
+    set_state_tick(spark, table, tick, now_ms=1_000)
+
+
+def _drop(spark, table):
+    import shutil
+
+    for t_ in (table, f"{table}__old", f"{table}__staging"):
+        spark.sql(f"DROP TABLE IF EXISTS {t_}")
+    shutil.rmtree(_log_dir(spark, table), ignore_errors=True)
+
+
+def _view(spark, table, **kw):
+    from flink_crawler_spark.operators.state_table import read_state_log
+
+    return {r["url"]: r.asDict() for r in read_state_log(spark, table, **kw).collect()}
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on(monkeypatch, name):
+    """Make state_table.<name> raise: a crash at that point of a tick."""
+    from flink_crawler_spark.operators import state_table
+
+    def boom(*_a, **_k):
+        raise _Crash(name)
+
+    monkeypatch.setattr(state_table, name, boom)
+
+
+BASE_ROWS = [
+    ("s", "s.com", "UNFETCHED", 100, 1.0, 100),  # the seed URL, already tracked
+    ("f", "f.com", "FETCHED", 100, 1.0, 900),
+]
+SEED_ROWS = [("s", "s.com", "UNFETCHED", 200, 2.0, 200), ("n", "n.com", "UNFETCHED", 200, 0.5, 200)]
+
+
+def test_orphan_delta_past_the_marker_is_ignored_and_replaced(spark, monkeypatch):
+    """A crash between a delta's write and the marker flip leaves an
+    orphan t<N>: reads ignore it, and re-running tick N overwrites it."""
+    import os
+
+    from flink_crawler_spark.operators.state_table import get_state_tick, tick_append_log
+
+    table = "log_orphan_test"
+    _fresh(spark, table, BASE_ROWS)
+    try:
+        before = _view(spark, table)
+        crashed = obs(spark, [("x", "x.com", "FETCHED", 300, 1.0, 999)])
+        with monkeypatch.context() as m:
+            _crash_on(m, "set_state_tick")
+            with pytest.raises(_Crash):
+                tick_append_log(spark, table, crashed, buckets=4, tick=1)
+        assert os.path.isdir(os.path.join(_log_dir(spark, table), "t1"))  # the orphan
+        assert get_state_tick(spark, table) == 0
+        assert _view(spark, table) == before  # ignored
+
+        rerun = obs(spark, [("y", "y.com", "FETCHED", 300, 1.0, 999)])
+        tick_append_log(spark, table, rerun, buckets=4, tick=1)
+        after = _view(spark, table)
+        assert "y" in after and "x" not in after  # replaced, not appended
+        assert get_state_tick(spark, table) == 1
+    finally:
+        _drop(spark, table)
+
+
+def test_recreated_table_never_reads_a_dropped_namesakes_log(spark):
+    """Deltas and pending seeds outlive DROP TABLE (they sit next to the
+    table, not inside it); a table re-created under the same name must
+    start with an empty log, even when its marker covers the old ticks."""
+    from flink_crawler_spark.operators.state_table import (
+        set_state_tick,
+        stage_pending_seeds,
+        tick_append_log,
+    )
+
+    table = "log_recreate_test"
+    _fresh(spark, table, BASE_ROWS)
+    try:
+        tick_append_log(spark, table, obs(spark, [("old", "o.com", "FETCHED", 300, 1.0, 9)]), buckets=4, tick=1)
+        stage_pending_seeds(spark, table, obs(spark, [("oldseed", "o.com", "UNFETCHED", 300, 1.0, 9)]))
+        assert {"old", "oldseed"} <= set(_view(spark, table))
+        spark.sql(f"DROP TABLE {table}")  # the log directory stays behind
+
+        from flink_crawler_spark.operators.state_table import save_bucketed_state
+
+        save_bucketed_state(obs(spark, BASE_ROWS), table, buckets=4)
+        set_state_tick(spark, table, 1)  # t1 and seeds_t2 would both be in range
+        assert set(_view(spark, table)) == {"s", "f"}
+    finally:
+        _drop(spark, table)
+
+
+@pytest.mark.parametrize("mode", ["log", "rewrite"])
+def test_pending_seeds_are_absorbed_exactly_once(spark, monkeypatch, mode):
+    """A staged seed batch shows in the live view, not in the committed
+    view; the next committed tick absorbs it once — through a crash
+    between the delta write and the marker flip (log mode) or between
+    the swap and the sweep (rewrite mode), and through a compaction that
+    runs while seeds are pending. UNFETCHED scores SUM in the lattice,
+    so a second absorption shows as a grown score."""
+    from flink_crawler_spark.operators.state_table import (
+        compact_state_log,
+        get_state_tick,
+        stage_pending_seeds,
+        tick_append_log,
+        tick_merge_bucketed,
+    )
+
+    table = f"log_seeds_{mode}_test"
+    _fresh(spark, table, BASE_ROWS)
+
+    def commit(tick, rows):
+        upd = obs(spark, rows)
+        if mode == "log":
+            tick_append_log(spark, table, upd, buckets=4, tick=tick, now_ms=1_000)
+        else:
+            tick_merge_bucketed(spark, table, upd, buckets=4, tick=tick, now_ms=1_000)
+
+    try:
+        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS)) == 0
+        live, committed = _view(spark, table), _view(spark, table, at_tick=0)
+        assert live["s"]["score"] == 3.0 and live["n"]["score"] == 0.5
+        assert committed["s"]["score"] == 1.0 and "n" not in committed
+
+        tick1 = [("f", "f.com", "FETCHED", 300, 1.0, 900)]
+        with monkeypatch.context() as m:
+            _crash_on(m, "set_state_tick" if mode == "log" else "_sweep")
+            with pytest.raises(_Crash):
+                commit(1, tick1)
+        # log mode: the orphan t1 is ignored, the seeds still pending;
+        # rewrite mode: the swap committed tick 1, and the seeds it folded
+        # sit at or below the marker, so they are ignored until swept
+        assert get_state_tick(spark, table) == (0 if mode == "log" else 1)
+        assert _view(spark, table)["s"]["score"] == 3.0
+        if mode == "log":
+            commit(1, tick1)
+        assert get_state_tick(spark, table) == 1
+        v1 = _view(spark, table)
+        assert v1["s"]["score"] == 3.0 and v1["n"]["score"] == 0.5
+        assert _view(spark, table, at_tick=1) == v1  # absorbed: committed now
+
+        # a second batch pending across a compaction stays pending
+        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS[:1])) == 1
+        compact_state_log(spark, table, buckets=4)
+        assert _view(spark, table, at_tick=1)["s"]["score"] == 3.0
+        assert _view(spark, table)["s"]["score"] == 5.0
+        commit(2, [("f", "f.com", "FETCHED", 400, 1.0, 900)])
+        compact_state_log(spark, table, buckets=4)
+        v2 = _view(spark, table)
+        assert v2["s"]["score"] == 5.0 and v2["n"]["score"] == 0.5
+        assert v2 == _view(spark, table, at_tick=2)
+        import os
+
+        assert not [
+            d for d in os.listdir(_log_dir(spark, table)) if d.startswith(("t", "seeds_"))
+        ]  # everything folded was swept
+    finally:
+        _drop(spark, table)

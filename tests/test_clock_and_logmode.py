@@ -92,9 +92,10 @@ def test_compact_state_log_preserves_clock(spark, leaf_graph):
 
 
 def test_ingest_seeds_table_preserves_jumped_clock(spark, leaf_graph):
-    """A streaming seed micro-batch merges through tick_merge_bucketed;
-    the swap must carry the table's jumped crawl.now_ms (previously it
-    stamped tick-only properties, stripping the clock every batch)."""
+    """A streaming seed micro-batch must leave the table's jumped
+    crawl.now_ms in place (an earlier full-table merge stamped tick-only
+    properties, stripping the clock every batch; pending-seed ingestion
+    touches no table property at all)."""
     from flink_crawler_spark.operators.state_table import get_state_now_ms
     from flink_crawler_spark.streaming.crawl_stream import ingest_seeds_table
 

@@ -354,3 +354,68 @@ def test_refetch_timer_sleep_jumps_the_clock(spark, simple_graph):
     }
     assert max(counts.values()) >= 2, counts
     assert res.ticks <= 6
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_config_rejects_non_finite_min_fetch_score(bad):
+    # the frontier inlines the threshold into SQL text, where inf/nan
+    # would not parse — the config surface refuses them up front
+    with pytest.raises(ValueError, match="min_fetch_score"):
+        CrawlConfig(min_fetch_score=bad)
+
+
+def test_mock_fetch_rejects_pages_sharing_frontier_columns(spark, simple_graph):
+    """mock_fetch's projection uses bare column names, which resolve only
+    while pages and frontier share none: an overlap is refused by name
+    instead of surfacing as an AMBIGUOUS_REFERENCE from the planner."""
+    from flink_crawler_spark.operators.fetch import mock_fetch
+
+    frontier = spark.createDataFrame(
+        [(D("domain1.com"), "domain1.com", 1.0, 0)], "url string, pld string, score double, fetch_time long"
+    )
+    assert mock_fetch(frontier, simple_graph, now_ms=1).count() == 1
+    with pytest.raises(ValueError, match="pld"):
+        mock_fetch(frontier, simple_graph.withColumn("pld", F.lit("x")), now_ms=1)
+
+
+def test_frontier_observation_read_is_bounded(spark):
+    """The crawl loop reads the frontier size from an Observation that
+    rides the checkpoint job. On AQE's empty-relation path the
+    CollectMetrics node is folded out of the plan and the metric arrives
+    as an empty row; a metric that never fires must not hang the loop.
+    Both come back as None (the loop then counts the cache) within the
+    wait bound."""
+    import time
+
+    from pyspark.sql import Observation
+
+    from flink_crawler_spark.plans.crawl_loop import _observed_count
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        # the observed side is empty at runtime after its shuffle, so AQE
+        # replaces the join — and the CollectMetrics below it — with an
+        # empty relation
+        obs = Observation("aqe_empty")
+        empty = spark.range(100).filter("id > 1000").repartition(2)
+        other = spark.range(50).withColumnRenamed("id", "k").repartition(2)
+        empty.observe(obs, F.count(F.lit(1)).alias("n")).join(
+            other, F.col("id") == F.col("k")
+        ).localCheckpoint(eager=True)
+        assert obs._jo.getRowOrEmpty().get().size() == 0  # the folded path
+        assert _observed_count(obs, wait_s=1.0) is None
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    # never fires: the JVM getRow() would wait forever
+    never = Observation("never_fires")
+    spark.range(3).observe(never, F.count(F.lit(1)).alias("n"))
+    t0 = time.monotonic()
+    assert _observed_count(never, wait_s=0.5) is None
+    assert time.monotonic() - t0 < 10
+
+    # a metric that did fire is read as-is
+    fired = Observation("fired")
+    spark.range(7).observe(fired, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    assert _observed_count(fired) == 7

@@ -110,6 +110,9 @@ def test_url_db_per_domain_timers(spark, tmp_path):
         # keep extending while the engine is still completing batches
         # (progress-based, not purely wall-clock): the test only fails
         # if the stream goes 120 s without BOTH progress and the result.
+        # Only batches that took input rows count as progress: a stream
+        # that keeps running empty timer batches without ever emitting
+        # the expected rows fails after 120 s, not at the hard cap.
         deadline = time.time() + 120
         hard_cap = time.time() + 600  # a genuinely broken stream still fails
         got = []
@@ -119,7 +122,11 @@ def test_url_db_per_domain_timers(spark, tmp_path):
             if {r["url"] for r in got} >= want:
                 break
             prog = q.lastProgress
-            if prog is not None and prog["batchId"] > last_batch:
+            if (
+                prog is not None
+                and prog["batchId"] > last_batch
+                and prog["numInputRows"] > 0
+            ):
                 last_batch = prog["batchId"]
                 deadline = time.time() + 120  # still alive: reset the clock
             time.sleep(1)
@@ -228,3 +235,98 @@ def test_streaming_crawl_with_bucketed_state_table(spark, tmp_path):
     finally:
         for t_ in (table, f"{table}__old", f"{table}__staging"):
             spark.sql(f"DROP TABLE IF EXISTS {t_}")
+
+
+def _ingest_by_full_merge(spark, seeds, table, *, now_ms, buckets):
+    """Seed ingestion as a full-table merge: fold the batch into the live
+    state through the crash-safe swap, keeping the marker and the clock
+    (the layout's reference semantics for a pending-seed batch)."""
+    from flink_crawler_spark.operators.merge import merge_crawl_state
+    from flink_crawler_spark.operators.state_table import (
+        get_state_now_ms,
+        get_state_tick,
+        save_bucketed_state,
+        set_state_tick,
+        tick_merge_bucketed,
+    )
+    from flink_crawler_spark.plans.crawl_loop import clean_urls, seeds_to_state
+
+    obs = seeds_to_state(clean_urls(seeds), now_ms=now_ms)
+    if not spark.catalog.tableExists(table):
+        save_bucketed_state(merge_crawl_state(obs), table, buckets=buckets)
+        set_state_tick(spark, table, 0, now_ms=now_ms)
+        return 0
+    tick, stored = get_state_tick(spark, table), get_state_now_ms(spark, table)
+    tick_merge_bucketed(spark, table, obs, buckets=buckets, tick=tick, now_ms=stored)
+    return tick
+
+
+def test_streamed_log_mode_crawl_equals_ingest_then_crawl(spark, tmp_path):
+    """Seeds streamed in micro-batches as pending-seed directories (log
+    mode, compaction inside the run) end in the same URL DB as ingesting
+    each batch by a full-table merge and then crawling the same ticks."""
+    from dataclasses import replace
+
+    from flink_crawler_spark.operators.state_table import read_state_log
+    from flink_crawler_spark.plans.crawl_loop import crawl
+
+    adjacency = {
+        "http://p1.com/": ["http://p1.com/a", "http://p2.com/"],
+        "http://p1.com/a": ["http://p3.com/"],
+        "http://p2.com/": ["http://p2.com/b"],
+        "http://p2.com/b": [],
+        "http://p3.com/": ["http://p1.com/"],
+    }
+    pages = render_pages(web_graph_from_adjacency(spark, adjacency)).localCheckpoint(
+        eager=True
+    )
+    seeds = ["http://p1.com/", "http://p2.com/b", "http://p1.com/"]  # a repeat: scores sum
+    cfg = CrawlConfig(collect_stats=False, state_log_every=3)
+    streamed, merged = "stream_pending_test", "stream_fullmerge_test"
+    start_ms, ticks = 1_700_000_000_000, 2
+    try:
+        for t_ in (streamed, merged):
+            spark.sql(f"DROP TABLE IF EXISTS {t_}")
+        seed_file = tmp_path / "seeds.txt"
+        seed_file.write_text("\n".join(seeds) + "\n")
+        q = continuous_crawl(
+            spark,
+            seed_path=str(seed_file),
+            pages=pages,
+            state_table=streamed,
+            state_buckets=4,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            config=cfg,
+            ticks_per_batch=ticks,
+            seeds_per_batch=1,
+            available_now=False,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        empty = spark.createDataFrame([], "url string, score double")
+        for url in seeds:
+            exists = spark.catalog.tableExists(merged)
+            from flink_crawler_spark.operators.state_table import get_state_now_ms, get_state_tick
+
+            tick = get_state_tick(spark, merged) if exists else 0
+            now = get_state_now_ms(spark, merged) if exists else start_ms
+            batch = spark.createDataFrame([(url, None)], "url string, score double")
+            _ingest_by_full_merge(spark, batch, merged, now_ms=now, buckets=4)
+            crawl(
+                spark, empty, pages=pages, start_ms=start_ms,
+                config=replace(
+                    cfg, state_table=merged, state_buckets=4,
+                    max_ticks=tick + ticks, trace=False,
+                ),
+            )
+        got = {r["url"]: r.asDict() for r in read_state_log(spark, streamed).collect()}
+        want = {r["url"]: r.asDict() for r in read_state_log(spark, merged).collect()}
+        assert got == want
+        assert got["http://p3.com/"]["status"] == "FETCHED"
+    finally:
+        for t_ in (streamed, merged):
+            for s_ in ("", "__old", "__staging"):
+                spark.sql(f"DROP TABLE IF EXISTS {t_}{s_}")

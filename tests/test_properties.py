@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from flink_crawler_spark.functions.urls import normalize_url
@@ -78,10 +78,23 @@ URLISH = st.text(
 
 
 @given(URLISH)
+@example("http://ex.com//../")  # an empty segment once hid ".." until a second pass
 @settings(max_examples=300)
 def test_normalizer_idempotent(u):
     once = normalize_url(u)
     assert normalize_url(once) == once
+
+
+def test_spark_column_normalizer_agrees_on_empty_segment_dotdot(spark):
+    """The Spark-column normalizer (the pandas UDF over normalize_url)
+    resolves "//../" in one pass, like the Python function."""
+    from flink_crawler_spark.functions.urls import normalize_url_udf
+
+    df = spark.createDataFrame([("http://ex.com//../",), ("http://ex.com/a//../b",)], ["u"])
+    once = df.select(normalize_url_udf("u").alias("u"))
+    twice = once.select(normalize_url_udf("u").alias("u"))
+    assert [r["u"] for r in once.collect()] == ["http://ex.com/", "http://ex.com/b"]
+    assert [r["u"] for r in twice.collect()] == ["http://ex.com/", "http://ex.com/b"]
 
 
 @given(st.sampled_from([
