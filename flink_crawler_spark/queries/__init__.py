@@ -76,6 +76,12 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- ntot rotation: stupid_backoff_score's corpus token total is a
+    # one-row grouping-free aggregate attached by broadcast cross join
+    # again, not a partition-less window over the per-doc table (which
+    # planned as Exchange SinglePartition -> Window). Value-oracled at
+    # sf0.001 + sf0.01.
+    "stupid_backoff_score",       # ntot: one-row aggregate, broadcast
     # --- state-log rotation: the queries on a value path the plain-file
     # state log changed — merge_updates_join as one SQL projection
     # (bucketed_state_merge), the merge lattice's status priority as a
@@ -96,11 +102,10 @@ PRIORITY_WINDOW = [
     # value-producing code path changed this round — the crawl-loop
     # restructure (no-op window elimination, string-expr projections,
     # observation-based termination), the stupid-backoff join-tower
-    # collapse, the connected-components driver fold + minhash array-HOF
-    # fusion and every consumer of the re-derived family sigs/pairs/
-    # clusters memos. Each was individually value-oracled at sf0.001 +
+    # collapse (that query now heads the ntot rotation), the connected-
+    # components driver fold + minhash array-HOF fusion and every
+    # consumer of the re-derived family sigs/pairs/clusters memos. Each was individually value-oracled at sf0.001 +
     # sf0.01 when made; the window makes the driver re-prove them.
-    "stupid_backoff_score",       # LOO tower: window-combined tables, 5 BHJ
     "curation_funnel",            # CC driver fold + fused minhash sigs
     "near_dup_clusters",          # CC driver fold
     "minhash_signatures",         # map-only array-HOF family sigs

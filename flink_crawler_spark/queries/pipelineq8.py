@@ -502,11 +502,16 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   - c2 (bigram) joins twice on (doc,x,y) with IDENTICAL build
     #     sides -> ONE BroadcastExchange, reused,
     #   - c1 (unigram) likewise,
-    #   - nd+ntot fold into one per-doc table (window total).
-    # 10 broadcast joins -> 5 (3 distinct broadcast builds); 6 global-agg
-    # exchanges -> 3 window exchanges that replace them 1:1 in the build
-    # jobs. Checkpoints stay: each combined table is the build output the
-    # probe job broadcasts.
+    #   - nd carries ntot, a one-row grouping-free aggregate over c1
+    #     attached by broadcast cross join. Not a partition-less window
+    #     total: that plans as Exchange SinglePartition -> Window and
+    #     runs every document's row through one task, which breaks
+    #     SCALE.md's partitioned-or-bounded window rule.
+    # 10 broadcast joins -> 5 (3 distinct broadcast builds, plus the
+    # one-row ntot broadcast inside nd's build); 6 global-agg exchanges ->
+    # 3 window exchanges that replace them 1:1 in the build jobs, plus
+    # ntot's merge of per-partition partial sums. Checkpoints stay: each
+    # combined table is the build output the probe job broadcasts.
     _w3 = Window.partitionBy("a", "b", "w")
     c3dw = (
         tr.groupBy("doc_id", "a", "b", "w")
@@ -526,10 +531,11 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c1g", F.sum("c1d").over(Window.partitionBy("w")))
         .localCheckpoint(eager=True)
     )
+    nn = c1.agg(F.sum("c1d").alias("ntot"))
     nd = (
         c1.groupBy("doc_id")
         .agg(F.sum("c1d").alias("ndoc"))
-        .withColumn("ntot", F.sum("ndoc").over(Window.partitionBy()))
+        .crossJoin(F.broadcast(nn))
     )
 
     # string-qualified aliases: the SAME c2/c1 frame joins twice, and
