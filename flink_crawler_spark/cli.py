@@ -181,12 +181,9 @@ def main(argv: list[str] | None = None) -> int:
         single_domain=args.singledomain,
         html_only=args.htmlonly,
         parser=args.parser,
-        agent=args.agent,
         trace=False,
         state_dir=args.checkpointdir,
         max_content_size=args.maxcontentsize,
-        fetch_timeout_sec=args.timeout,
-        fetchers_per_task=args.fetcherspertask,
         # content sinks need the accumulated parse output; without this a
         # >50-tick crawl auto-enables compaction, keep_parsed defaults
         # off, res.parsed is None, and the explicitly requested sinks

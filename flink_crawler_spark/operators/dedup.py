@@ -321,13 +321,21 @@ def connected_components(
     of join+agg+checkpoint+count. Near-dup graphs are tiny relative to
     the corpus by construction (edges exist only between near-identical
     docs); corpora whose edge lists exceed the gate keep the distributed
-    loop unchanged. Path parity is pinned by
+    loop unchanged. Edges with a NULL endpoint or one outside ``nodes``
+    are ignored on both paths. Path parity is pinned by
     tests/test_dedup_similarity.py::test_cc_driver_fold_parity.
     """
+    ids = nodes.select(F.col(id_col).alias("id"))
+    # only edges between two nodes count: the distributed loop drops an
+    # edge with a NULL or non-node endpoint at its label joins, and the
+    # driver fold must not chain nodes through (or label them by) such
+    # an endpoint — filter the small edge list, not the nodes
     sym_lazy = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
         .distinct()
+        .join(ids.withColumnRenamed("id", "a"), "a", "left_semi")
+        .join(ids.withColumnRenamed("id", "b"), "b", "left_semi")
     )
     # gate probe and edge fetch in ONE action: limit(G+1) either returns
     # the whole (bounded) edge list or proves it exceeds the gate
@@ -352,7 +360,6 @@ def connected_components(
         remap = [
             (x, find(x)) for x in list(parent) if find(x) != x
         ]  # non-representatives only; everything else labels itself
-        ids = nodes.select(F.col(id_col).alias("id"))
         if not remap:
             return ids.select(F.col("id").alias(id_col), F.col("id").alias("cluster_id"))
         spark = nodes.sparkSession

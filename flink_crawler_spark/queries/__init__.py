@@ -76,6 +76,17 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- state-backend rotation: the crawl loop's state modes moved
+    # behind one backend (plans/state_backend.py) — crawl_reachability
+    # runs the loop, bucketed_state_merge the table swap it calls — and
+    # connected_components now drops edges with a NULL or non-node
+    # endpoint before its driver fold (curation_funnel and
+    # near_dup_keep_best consume the clusters). Value-oracled at sf0.001
+    # + sf0.01.
+    "crawl_reachability",         # loop through the state backend
+    "bucketed_state_merge",       # table backend's rewrite swap
+    "curation_funnel",            # CC fold: node-only edge list
+    "near_dup_keep_best",         # CC fold: node-only edge list
     # --- ntot rotation: stupid_backoff_score's corpus token total is a
     # one-row grouping-free aggregate attached by broadcast cross join
     # again, not a partition-less window over the per-doc table (which
@@ -88,9 +99,7 @@ PRIORITY_WINDOW = [
     # SQL CASE (every merged_crawl_state consumer), and the crawl loop's
     # bounded frontier-count read and mock_fetch column guard
     # (crawl_reachability). Each was value-oracled at sf0.001 + sf0.01.
-    "bucketed_state_merge",       # merge_updates_join + the swap
     "crawl_merge_lattice",        # merge_crawl_state priority CASE
-    "crawl_reachability",         # loop: bounded observation read
     "frontier_topk",              # merged_crawl_state consumer
     "frontier_domain_quota",      # merged_crawl_state consumer
     "status_counts",              # merged_crawl_state consumer
@@ -106,7 +115,6 @@ PRIORITY_WINDOW = [
     # components driver fold + minhash array-HOF fusion and every
     # consumer of the re-derived family sigs/pairs/clusters memos. Each was individually value-oracled at sf0.001 +
     # sf0.01 when made; the window makes the driver re-prove them.
-    "curation_funnel",            # CC driver fold + fused minhash sigs
     "near_dup_clusters",          # CC driver fold
     "minhash_signatures",         # map-only array-HOF family sigs
     "lsh_candidate_pairs",        # consumes the re-derived sigs memo
@@ -114,7 +122,6 @@ PRIORITY_WINDOW = [
     "excerpt_containment_pairs",  # consumes sigs memo
     "ngram_jaccard_pairs",        # consumes sigs memo
     "cross_source_contamination", # consumes verified-pairs memo
-    "near_dup_keep_best",         # consumes clusters memo
     "leakage_safe_split",         # consumes clusters memo
     "dedup_survivor_quality",     # consumes clusters memo
     "quality_dedup_calibration",  # consumes clusters memo

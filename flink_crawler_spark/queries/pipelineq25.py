@@ -238,8 +238,8 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     anchors = nbr.where(F.expr(_LP_ANCHOR_SPARK)).select("pa").distinct()
     x = nbr.join(F.broadcast(anchors), "pa").selectExpr("pa AS a", "pb AS n")
     y = nbr.selectExpr("pa AS n", "pb AS c")
-    # signed-weight sentinel fold (r10 variance-shrink A/B,
-    # tools/jaccard_variance_ab.py): hops carry +1, markers carry -2^40,
+    # signed-weight sentinel fold (r10 variance-shrink A/B, SCALE.md
+    # "graph_jaccard variance-shrink A/B/C"): hops carry +1, markers carry -2^40,
     # so ONE sum per group replaces the previous (conditional-sum,
     # max-flag) pair — a group containing a marker goes negative and is
     # dropped, and the surviving sum IS the common-neighbor count

@@ -122,10 +122,8 @@ def test_ingest_seeds_dir_preserves_jumped_clock(spark, leaf_graph, tmp_path):
     marker, PRESERVING a persisted clock (the old single-token write
     dropped it; a refetch crawl then resumed rewound and re-burned
     ticks re-deriving its jumps)."""
-    from flink_crawler_spark.streaming.crawl_stream import (
-        _latest_marker,
-        ingest_seeds,
-    )
+    from flink_crawler_spark.plans.state_backend import _latest_marker
+    from flink_crawler_spark.streaming.crawl_stream import ingest_seeds
 
     state_dir = str(tmp_path / "state")
     res = crawl(

@@ -389,7 +389,7 @@ def test_frontier_observation_read_is_bounded(spark):
 
     from pyspark.sql import Observation
 
-    from flink_crawler_spark.plans.crawl_loop import _observed_count
+    from flink_crawler_spark.plans.state_backend import _observed_count
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -138,7 +138,8 @@ def test_connected_components_known_graph(spark):
 def test_cc_driver_fold_parity(spark):
     """r13 driver-fold gate: the union-find fast path and the distributed
     min-label loop must agree label-for-label on irregular graphs
-    (chains, stars, merging components, self-loops, singletons)."""
+    (chains, stars, merging components, self-loops, singletons, and
+    edges with a NULL endpoint or one outside the node set)."""
     import random
 
     from flink_crawler_spark.operators.dedup import connected_components
@@ -163,6 +164,24 @@ def test_cc_driver_fold_parity(spark):
             ).collect()
         }
         assert fold == loop, f"trial {trial}: {fold} != {loop}"
+
+    # edges through endpoints outside `nodes`, and NULL endpoints: the
+    # distributed loop drops them at its joins, so the fold must too —
+    # 1-x-2 does not merge 1 and 2, and no node is labelled by an id
+    # that is not a node
+    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "id long")
+    foreign = [
+        ([(1, 100), (100, 2), (0, 3), (3, 4), (5, 6)], {1: 1, 2: 2, 3: 3, 4: 3, 5: 5, 6: 5, 7: 7}),
+        ([(1, None), (None, 2), (2, 3), (None, None), (6, 7)], {1: 1, 2: 2, 3: 2, 4: 4, 5: 5, 6: 6, 7: 6}),
+    ]
+    for e, want in foreign:
+        edges = spark.createDataFrame(e, "src long, dst long")
+        fold = {r["id"]: r["cluster_id"] for r in connected_components(nodes, edges).collect()}
+        loop = {
+            r["id"]: r["cluster_id"]
+            for r in connected_components(nodes, edges, driver_fold_max_edges=0).collect()
+        }
+        assert fold == loop == want, (e, fold, loop)
 
 
 def test_exact_cosine_pairs_blocked_matches_ground_truth(spark, sf_dir):

@@ -6,7 +6,9 @@ log mode (``state_log_every``) must crawl the same graph to the same
 final state, the same ``res.ticks`` and the same per-tick ``res.stats``
 — with the status counters on and off (stats on, the table log mode
 finalizes each tick's counts one tick in arrears; off, every mode stops
-one tick later on the empty frontier).
+one tick later on the empty frontier). A corrupt ``_LATEST`` snapshot
+marker is rejected with the same clear error by the loop's resume and by
+the streaming seed ingest.
 """
 
 from __future__ import annotations
@@ -92,3 +94,19 @@ def test_state_modes_agree(spark, graph, reference, mode, stats, tmp_path):
     else:
         assert tick_stats == []
 
+
+def test_corrupt_snapshot_marker_is_a_clear_error(spark, graph, tmp_path):
+    """Resume and seed ingest read the one marker format ("tick" or
+    "tick now_ms"); anything else names the marker file instead of
+    surfacing as a bare IndexError/ValueError from deep inside."""
+    from flink_crawler_spark.streaming.crawl_stream import ingest_seeds
+
+    seeds, pages = graph
+    for content in ("", "not-a-tick", "3 soon"):
+        state_dir = tmp_path / f"state{len(content)}"
+        state_dir.mkdir()
+        (state_dir / "_LATEST").write_text(content)
+        with pytest.raises(ValueError, match="corrupt checkpoint marker"):
+            crawl(spark, seeds, pages=pages, config=CrawlConfig(max_ticks=2, state_dir=str(state_dir)))
+        with pytest.raises(ValueError, match="corrupt checkpoint marker"):
+            ingest_seeds(spark, seeds, str(state_dir), now_ms=1_700_000_000_000)
