@@ -289,8 +289,6 @@ def crawl(
                 spark.conf.set(k, v)
 
 
-
-
 def _crawl_body(
     spark: SparkSession,
     seeds: DataFrame,
@@ -344,10 +342,10 @@ def _crawl_body(
             )
 
     # Durable state (reference: Flink checkpointing, CrawlTool.java:60-64
-    # — AT_LEAST_ONCE with possible in-flight loss on iterations). Here
-    # the backend's persisted state is the checkpoint: each tick replaces
-    # it atomically, so restart resumes from the last completed tick with
-    # exactly-once effects — strictly stronger.
+    # — AT_LEAST_ONCE with possible in-flight loss on iterations). Here a
+    # durable backend's persisted state is the checkpoint: each tick
+    # replaces it atomically, so restart resumes from the last completed
+    # tick with exactly-once effects — strictly stronger.
     opened = backend.open()
     if opened is None:
         start_tick, now_ms = 0, start_ms
