@@ -190,15 +190,22 @@ def set_state_tick(
     _set_props(spark, table, {"crawl.tick": tick, "crawl.now_ms": now_ms})
 
 
+def get_state_marker(spark: SparkSession, table: str) -> tuple[int, int | None]:
+    """(completed tick, persisted simulated clock) from one catalog
+    lookup; the tick is 0 when unset, the clock None (pre-clock tables)."""
+    props = _meta(spark, table)[0]
+    v = props.get("crawl.now_ms")
+    return int(props.get("crawl.tick", 0)), (int(v) if v is not None else None)
+
+
 def get_state_tick(spark: SparkSession, table: str) -> int:
     """Completed-tick number stored on the table; 0 when unset."""
-    return int(_meta(spark, table)[0].get("crawl.tick", 0))
+    return get_state_marker(spark, table)[0]
 
 
 def get_state_now_ms(spark: SparkSession, table: str) -> int | None:
     """Persisted simulated clock; None when unset (pre-clock tables)."""
-    v = _meta(spark, table)[0].get("crawl.now_ms")
-    return int(v) if v is not None else None
+    return get_state_marker(spark, table)[1]
 
 
 # ---------------------------------------------------------------------------

@@ -55,8 +55,7 @@ from pyspark.sql import functions as F
 from ..operators.merge import merge_crawl_state, merge_updates
 from ..operators.state_table import (
     compact_state_log,
-    get_state_now_ms,
-    get_state_tick,
+    get_state_marker,
     load_bucketed_state,
     read_state_log,
     save_bucketed_state,
@@ -323,7 +322,7 @@ class _TableBackend(_MemoryBackend):
         # restore the live name from __old first: a crash inside a swap
         # leaves only the backup, and the table carries the marker
         load_bucketed_state(self.spark, self.table)
-        return get_state_tick(self.spark, self.table), get_state_now_ms(self.spark, self.table)
+        return get_state_marker(self.spark, self.table)
 
     def _load(self, tick: int) -> DataFrame:
         # always the log view: a table run in log mode may carry

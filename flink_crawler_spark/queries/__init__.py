@@ -76,6 +76,20 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- memo rotation: the nine corpus-snapshot builders share one
+    # memo (queries/base.py @memo, keyed on the call's arguments with
+    # defaults applied, DataFrame arguments left out); one oracled
+    # consumer per builder. Value-oracled at sf0.001 + sf0.01.
+    "near_dup_threshold_sweep",   # shingle_tables
+    "minhash_signatures",         # minhash_sigs
+    "cross_source_contamination", # near_dup_verified_pairs
+    "near_dup_keep_best",         # near_dup_clusters
+    "frontier_topk",              # merged_crawl_state
+    "pq_codebook_encode",         # _pq_core
+    "ccnet_bigram_nll",           # bigram_nll_table
+    "ann_topk_ivf",               # _ivf_exact_centroids_cached, no xn
+    "ann_recall_report",          # _ivf_exact_centroids_cached, its xn
+    "facility_location_select",   # parquet_row_count-gated driver fold
     # --- state-backend rotation: the crawl loop's state modes moved
     # behind one backend (plans/state_backend.py) — crawl_reachability
     # runs the loop, bucketed_state_merge the table swap it calls — and
@@ -86,7 +100,6 @@ PRIORITY_WINDOW = [
     "crawl_reachability",         # loop through the state backend
     "bucketed_state_merge",       # table backend's rewrite swap
     "curation_funnel",            # CC fold: node-only edge list
-    "near_dup_keep_best",         # CC fold: node-only edge list
     # --- ntot rotation: stupid_backoff_score's corpus token total is a
     # one-row grouping-free aggregate attached by broadcast cross join
     # again, not a partition-less window over the per-doc table (which
@@ -100,7 +113,6 @@ PRIORITY_WINDOW = [
     # bounded frontier-count read and mock_fetch column guard
     # (crawl_reachability). Each was value-oracled at sf0.001 + sf0.01.
     "crawl_merge_lattice",        # merge_crawl_state priority CASE
-    "frontier_topk",              # merged_crawl_state consumer
     "frontier_domain_quota",      # merged_crawl_state consumer
     "status_counts",              # merged_crawl_state consumer
     "domain_avg_of_avgs",         # merged_crawl_state consumer
@@ -116,22 +128,21 @@ PRIORITY_WINDOW = [
     # consumer of the re-derived family sigs/pairs/clusters memos. Each was individually value-oracled at sf0.001 +
     # sf0.01 when made; the window makes the driver re-prove them.
     "near_dup_clusters",          # CC driver fold
-    "minhash_signatures",         # map-only array-HOF family sigs
     "lsh_candidate_pairs",        # consumes the re-derived sigs memo
     "minhash_estimate_calibration",  # consumes sigs memo
     "excerpt_containment_pairs",  # consumes sigs memo
     "ngram_jaccard_pairs",        # consumes sigs memo
-    "cross_source_contamination", # consumes verified-pairs memo
     "leakage_safe_split",         # consumes clusters memo
     "dedup_survivor_quality",     # consumes clusters memo
     "quality_dedup_calibration",  # consumes clusters memo
-    "near_dup_threshold_sweep",   # shares the shingle base the sigs read
     # --- slots 17-50: the 34 least-recently-windowed queries (window
     # history recomputed from CORRECTNESS_r01..r12: the r5-vintage
     # quartet, then 30 of the 34 r6-vintage rows alphabetically —
     # systematic_pps_sample / temporal_split_embargo /
     # unpivot_priority_metrics / weekday_revenue_profile are the four
-    # r6 rows left for a future rotation, all bench-green every round).
+    # r6 rows left for a future rotation, all bench-green every round;
+    # the memo rotation took the slots of the last five,
+    # quartiles_one_pass .. softdedup_loss_weights).
     "pagerank_5iter",
     "quantity_bag_ops",
     "scd2_versioned_revenue",
@@ -161,11 +172,6 @@ PRIORITY_WINDOW = [
     "poisson_bootstrap_ci",
     "price_histogram_buckets",
     "price_range_density",
-    "quartiles_one_pass",
-    "redirect_chain_resolve",
-    "robots_crawl_delay_budget",
-    "rolling_7d_distinct_users",
-    "softdedup_loss_weights",
 ]
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_crawl_state
-from .base import EV_MS, EV_SEC, register, t, ts_millis
+from .base import EV_MS, EV_SEC, memo, register, t, ts_millis
 from .base import dsum_wide as _dsum_wide
 from .base import dsum_wide_sql as _dws
 
@@ -114,21 +114,17 @@ def crawl_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (st + F.lit(86400000)).alias("next_fetch_time"),
     )
 
-_MERGED_STATE_CACHE: dict[tuple, "DataFrame"] = {}
-
-
+@memo
 def merged_crawl_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The URL-DB merge lattice folded over the derived observation
     table, computed once per (session, corpus) and memoized (the r7
     shared-builder pattern): seven queries audit facets of the SAME
     merged state — a crawler materializes its URL DB once per tick, not
     once per reader."""
-    key = (spark, sf_dir)
-    hit = _MERGED_STATE_CACHE.get(key)
-    if hit is None:
-        hit = merge_crawl_state(crawl_obs(spark, sf_dir)).localCheckpoint(eager=True)
-        _MERGED_STATE_CACHE[key] = hit
-    return hit
+    return merge_crawl_state(crawl_obs(spark, sf_dir)).localCheckpoint(eager=True)
+
+
+_MERGED_STATE_CACHE = merged_crawl_state.cache
 
 
 

@@ -17,7 +17,7 @@ from ..operators.dedup import (
     ngram_jaccard,
     simhash64,
 )
-from .base import register, t
+from .base import memo, register, t
 
 # word tokens with the same split the Spark-side operators use
 DUCK_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
@@ -176,6 +176,74 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_THRESHOLD = 0.6
 
 
+@memo
+def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized family MinHash signature table (doc_id, mh0..mh7) at the
+    family K, derived from the session-shared shingle base — five
+    consumers (minhash_signatures, lsh_candidate_pairs, the calibration
+    and containment verifies, the verified-pairs edge list) each re-ran
+    the same min-aggregate over the exploded shingles (r12, guide §2.4).
+    One materialization per corpus snapshot, values bit-identical (the
+    keyed-md5 min is order-independent)."""
+    from .base import shingle_tables
+
+    # r13 (guide §2.4, the near_dup_pairs fusion): per-doc MINs as
+    # array HOFs over the checkpointed shingle sets — map-only, no
+    # explode + K-min shuffle. Bit-identical (min over the same md5
+    # set; the oracle's own list_min(list_transform(...)) formula).
+    # Empty-shingle docs produced NO row under the exploded groupBy —
+    # the mh0 filter keeps that exact behavior.
+    sets, _ = shingle_tables(spark, sf_dir, 3)
+    return (
+        sets.selectExpr(
+            "doc_id",
+            *[
+                f"array_min(transform(sh, s -> md5(concat('{k}|', s)))) AS mh{k}"
+                for k in range(NUM_HASHES)
+            ],
+        )
+        .where("mh0 IS NOT NULL")
+        .localCheckpoint(eager=True)
+    )
+
+
+_SIGS_CACHE = minhash_sigs.cache
+
+
+@memo
+def near_dup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized VERIFIED near-dup pair set (id_a, id_b) at the family
+    threshold — the edge list of ``near_dup_clusters``, exposed so its
+    other consumer (``cross_source_contamination``) stops re-running
+    the signature -> band -> verify chain from raw text (r12, guide
+    §2.4: the shingle/verify pass is the dominant cost of every query
+    in this family and is identical across them).
+
+    Derived from the session-shared shingle base: the per-doc shingle
+    SET is what every downstream value depends on — the min-hash over
+    exploded shingles is order/duplicate-independent, band hashes are
+    functions of the signature values, and the exact Jaccard uses
+    array_intersect/array_union sizes (set semantics) — so pairs are
+    bit-identical to the previous from-raw-text derivation (the
+    minhash_signatures precedent). Memoized per (session, corpus) like
+    the clustering itself: one materialization per corpus snapshot."""
+    from ..operators.dedup import _jaccard_on_shingles
+    from .base import shingle_tables
+
+    sets, _ = shingle_tables(spark, sf_dir, 3)
+    sigs = minhash_sigs(spark, sf_dir)
+    cand = lsh_candidate_pairs(sigs, num_hashes=NUM_HASHES, bands=BANDS)
+    return (
+        _jaccard_on_shingles(sets, cand, id_col="doc_id")
+        .filter(F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True)
+    )
+
+
+_VERIFIED_PAIRS_CACHE = near_dup_verified_pairs.cache
+
+
 @register(
     "near_dup_clusters",
     oracle=f"""
@@ -209,6 +277,7 @@ SELECT id AS doc_id, min(lbl) AS cluster_id
 FROM reach GROUP BY id
 """,
 )
+@memo
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup clustering: MinHash -> LSH candidates -> exact
     Jaccard verify -> connected components (iterative HashMin in the
@@ -222,101 +291,18 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream queries (keep_best, survivor-quality, cluster-histogram,
     quality-calibration) consume the SAME deterministic clustering, and
     a production dedup materializes it once per corpus snapshot."""
-    key = (spark, sf_dir)
-    hit = _CLUSTER_CACHE.get(key)
-    if hit is not None:
-        return hit
-
     from ..operators.dedup import connected_components
 
     docs = t(spark, sf_dir, "documents")
     edges = near_dup_verified_pairs(spark, sf_dir).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    out = connected_components(
+    return connected_components(
         docs.select("doc_id"), edges, id_col="doc_id"
     ).select("doc_id", "cluster_id").localCheckpoint(eager=True)
-    _CLUSTER_CACHE[key] = out
-    return out
 
 
-_CLUSTER_CACHE: dict[tuple, DataFrame] = {}
-
-
-def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized family MinHash signature table (doc_id, mh0..mh7) at the
-    family K, derived from the session-shared shingle base — five
-    consumers (minhash_signatures, lsh_candidate_pairs, the calibration
-    and containment verifies, the verified-pairs edge list) each re-ran
-    the same min-aggregate over the exploded shingles (r12, guide §2.4).
-    One materialization per corpus snapshot, values bit-identical (the
-    keyed-md5 min is order-independent)."""
-    key = (spark, sf_dir)
-    hit = _SIGS_CACHE.get(key)
-    if hit is None:
-        from .base import shingle_tables
-
-        # r13 (guide §2.4, the near_dup_pairs fusion): per-doc MINs as
-        # array HOFs over the checkpointed shingle sets — map-only, no
-        # explode + K-min shuffle. Bit-identical (min over the same md5
-        # set; the oracle's own list_min(list_transform(...)) formula).
-        # Empty-shingle docs produced NO row under the exploded groupBy —
-        # the mh0 filter keeps that exact behavior.
-        sets, _ = shingle_tables(spark, sf_dir, 3)
-        hit = (
-            sets.selectExpr(
-                "doc_id",
-                *[
-                    f"array_min(transform(sh, s -> md5(concat('{k}|', s)))) AS mh{k}"
-                    for k in range(NUM_HASHES)
-                ],
-            )
-            .where("mh0 IS NOT NULL")
-            .localCheckpoint(eager=True)
-        )
-        _SIGS_CACHE[key] = hit
-    return hit
-
-
-_SIGS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def near_dup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized VERIFIED near-dup pair set (id_a, id_b) at the family
-    threshold — the edge list of ``near_dup_clusters``, exposed so its
-    other consumer (``cross_source_contamination``) stops re-running
-    the signature -> band -> verify chain from raw text (r12, guide
-    §2.4: the shingle/verify pass is the dominant cost of every query
-    in this family and is identical across them).
-
-    Derived from the session-shared shingle base: the per-doc shingle
-    SET is what every downstream value depends on — the min-hash over
-    exploded shingles is order/duplicate-independent, band hashes are
-    functions of the signature values, and the exact Jaccard uses
-    array_intersect/array_union sizes (set semantics) — so pairs are
-    bit-identical to the previous from-raw-text derivation (the
-    minhash_signatures precedent). Memoized per (session, corpus) like
-    the clustering itself: one materialization per corpus snapshot."""
-    key = (spark, sf_dir)
-    hit = _VERIFIED_PAIRS_CACHE.get(key)
-    if hit is None:
-        from ..operators.dedup import _jaccard_on_shingles
-        from .base import shingle_tables
-
-        sets, _ = shingle_tables(spark, sf_dir, 3)
-        sigs = minhash_sigs(spark, sf_dir)
-        cand = lsh_candidate_pairs(sigs, num_hashes=NUM_HASHES, bands=BANDS)
-        hit = (
-            _jaccard_on_shingles(sets, cand, id_col="doc_id")
-            .filter(F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
-        )
-        _VERIFIED_PAIRS_CACHE[key] = hit
-    return hit
-
-
-_VERIFIED_PAIRS_CACHE: dict[tuple, DataFrame] = {}
+_CLUSTER_CACHE = near_dup_clusters.cache
 
 
 @register(

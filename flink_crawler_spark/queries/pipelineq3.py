@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .base import register, t
+from .base import memo, register, t
 from .base import dec_to_double_wide as _d2dw
 from .base import dsum_wide_expr_sql as _dwes
 from .base import dec_to_double_wide_sql as _d2dws
@@ -229,9 +229,7 @@ FROM a2
 """
 
 
-_PQ_CORE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@memo
 def _pq_core(spark: SparkSession, sf_dir: str):
     """Shared PQ train+encode core: split each embedding into PQ_M
     subspaces of PQ_SUB dims, train a PQ_K-centroid codebook per
@@ -240,7 +238,7 @@ def _pq_core(spark: SparkSession, sf_dir: str):
     final assignments a2 as (vec_id, m, cid, dist)) — consumed by
     pq_codebook_encode, ann_topk_pq_adc, and ann_recall_report, and
     therefore memoized per (session, corpus) like the other family
-    builders (r7 pattern; cleared by base.clear_query_caches) — a
+    builders (r7 pattern) — a
     production IVF-PQ store trains/encodes once per corpus snapshot.
 
     Plan shape: subspace id is a KEY COLUMN, so one assign/update/assign
@@ -249,11 +247,6 @@ def _pq_core(spark: SparkSession, sf_dir: str):
     update partial-aggregates map-side, and every distance is the same
     left-associated fold both engines evaluate bit-for-bit."""
     from pyspark.sql import Window
-
-    key = (spark, sf_dir)
-    hit = _PQ_CORE_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     emb = t(spark, sf_dir, "embeddings")
     ms = spark.range(1, PQ_M + 1).select(F.col("id").cast("int").alias("m"))
@@ -302,9 +295,10 @@ def _pq_core(spark: SparkSession, sf_dir: str):
         .select("m", "cid", F.transform("p", lambda q: q["cd"]).alias("cv"))
     )
     a2 = assign(c1, with_dist=True)
-    hit = (c1.localCheckpoint(eager=True), a2.localCheckpoint(eager=True))
-    _PQ_CORE_CACHE[key] = hit
-    return hit
+    return c1.localCheckpoint(eager=True), a2.localCheckpoint(eager=True)
+
+
+_PQ_CORE_CACHE = _pq_core.cache
 
 
 def pq_codebook_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
-from .base import register, t
+from .base import memo, register, t
 
 # single source of truth for the oracle token class — textops builds it
 # from the same TOKEN_SPLIT_RE that functions/text.py::tokens_expr uses,
@@ -170,9 +170,7 @@ nll AS (
 )"""
 
 
-_BIGRAM_NLL_CACHE: dict[tuple, DataFrame] = {}
-
-
+@memo
 def bigram_nll_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram-LM scores (doc_id, n_bigrams, avg_nll), computed
     once per (session, corpus) and memoized — ccnet_bigram_nll emits it
@@ -180,12 +178,10 @@ def bigram_nll_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage scores the corpus once and every downstream read reuses the
     table (the r7 shared-builder pattern, like queries/base.py
     shingle_tables)."""
-    key = (spark, sf_dir)
-    hit = _BIGRAM_NLL_CACHE.get(key)
-    if hit is None:
-        hit = doc_bigram_nll(t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-        _BIGRAM_NLL_CACHE[key] = hit
-    return hit
+    return doc_bigram_nll(t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+
+
+_BIGRAM_NLL_CACHE = bigram_nll_table.cache
 
 
 def doc_bigram_nll(d: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ from ..operators.similarity import (
     cosine_expr,
     embedding_near_dup_pairs,
 )
-from .base import register, t
+from .base import memo, register, t
 from .base import dec_to_double_wide as _d2dw
 from .base import dsum_wide_expr_sql as _dwes
 
@@ -548,20 +548,19 @@ ANN_IVF_N_PROBE = 4
 
 # Exact-twin IVF centroids are corpus-level state (like the shingle
 # base): train once per (session, corpus), share between
-# ann_recall_report and ann_topk_ivf. Cleared by base.clear_query_caches.
-_IVF_CENT_CACHE: dict[tuple, DataFrame] = {}
-
-
+# ann_recall_report (which passes its normalized frame ``xn``, used on a
+# miss only) and ann_topk_ivf.
+@memo
 def _ivf_exact_centroids_cached(
     spark: SparkSession, sf_dir: str, xn: DataFrame | None = None
 ) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _IVF_CENT_CACHE:
-        emb = t(spark, sf_dir, "embeddings").repartition(4)
-        if xn is None:
-            xn = _xn_frame(emb).localCheckpoint(eager=True)
-        _IVF_CENT_CACHE[key] = _ivf_exact_centroids(spark, emb, xn)
-    return _IVF_CENT_CACHE[key]
+    emb = t(spark, sf_dir, "embeddings").repartition(4)
+    if xn is None:
+        xn = _xn_frame(emb).localCheckpoint(eager=True)
+    return _ivf_exact_centroids(spark, emb, xn)
+
+
+_IVF_CENT_CACHE = _ivf_exact_centroids_cached.cache
 
 
 @register(
@@ -636,7 +635,7 @@ def ann_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same struct-MAX / window / rounded-cosine constructions, so the
     DuckDB twin (_ivf_chain_sql) reproduces the candidate set and every
     score bit-for-bit. Centroids are trained once per (session, corpus)
-    and shared with ann_recall_report (_IVF_CENT_CACHE)."""
+    and shared with ann_recall_report (one memoized builder)."""
     from pyspark.sql import Window
 
     emb = t(spark, sf_dir, "embeddings").repartition(4)

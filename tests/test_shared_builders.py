@@ -7,6 +7,11 @@ helpers must stay bit-identical to the Window semantics they replaced
 every consumer the SAME materialization, and the stream session clone
 must never leak its shuffle-partition setting into the caller's session
 (the round-6 ADVICE hazard the clone exists to remove).
+
+The builders share one memo (``queries.base.memo``): its store is what
+``clear_query_caches`` empties and what the benchmark's tracer
+(``perfbench/tracing.py`` ``MEMO_FUNCS``) reads to tell a hit from a
+miss, so both contracts are pinned here.
 """
 
 from __future__ import annotations
@@ -91,6 +96,80 @@ def test_near_dup_clusters_memoized(spark, sf_dir):
     c1 = near_dup_clusters(spark, sf_dir)
     c2 = near_dup_clusters(spark, sf_dir)
     assert c1 is c2
+
+
+def _memo_funcs() -> dict[str, tuple[str, str, str]]:
+    """The tracer's builder table, read from perfbench/tracing.py."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "tracing.py")
+    spec = importlib.util.spec_from_file_location("_perfbench_tracing", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.MEMO_FUNCS
+
+
+def test_clear_query_caches_empties_every_builder_store(spark, sf_dir):
+    from flink_crawler_spark.queries.base import (
+        _TABLE_HANDLE_CACHE,
+        BUILDERS,
+        clear_query_caches,
+        parquet_row_count,
+        shingle_tables,
+    )
+
+    shingle_tables(spark, sf_dir)
+    parquet_row_count(sf_dir, "embeddings")
+    assert shingle_tables.cache and parquet_row_count.cache and _TABLE_HANDLE_CACHE
+    clear_query_caches()
+    assert {name: len(b.cache) for name, b in BUILDERS.items()} == dict.fromkeys(BUILDERS, 0)
+    # the lazy scan handles hold no data and are not a builder's store
+    assert _TABLE_HANDLE_CACHE
+
+
+def test_tracer_memo_table_matches_the_builders(spark, sf_dir):
+    """Every (module, function, store) the tracer names resolves to a
+    registered builder and its own store, which grows by one on a miss
+    and not at all on a hit."""
+    import importlib
+
+    from flink_crawler_spark.queries.base import BUILDERS, clear_query_caches
+
+    funcs = _memo_funcs()
+    assert len(funcs) == len(BUILDERS)
+    for builder, (module, func, store) in funcs.items():
+        mod = importlib.import_module(module)
+        fn, cache = getattr(mod, func), getattr(mod, store)
+        assert BUILDERS[builder] is fn and fn.cache is cache, builder
+        args = (sf_dir, "embeddings") if builder == "parquet_row_count" else (spark, sf_dir)
+        clear_query_caches()  # a builder may build another as its input
+        first = fn(*args)
+        assert len(cache) == 1, builder
+        assert fn(*args) is first and len(cache) == 1, builder
+
+
+def test_memo_key_applies_defaults(spark, sf_dir):
+    from flink_crawler_spark.queries.base import shingle_tables
+
+    shingle_tables.cache.clear()
+    a = shingle_tables(spark, sf_dir)
+    assert shingle_tables(spark, sf_dir, 3) is a
+    assert shingle_tables(spark, sf_dir=sf_dir, n=3) is a
+    assert len(shingle_tables.cache) == 1
+
+
+def test_memo_key_leaves_dataframe_arguments_out(spark, sf_dir):
+    """ann_recall_report hands the IVF builder its own normalized frame,
+    ann_topk_ivf does not: both must get the one training."""
+    from flink_crawler_spark.queries.base import t
+    from flink_crawler_spark.queries.simq import _ivf_exact_centroids_cached, _xn_frame
+
+    _ivf_exact_centroids_cached.cache.clear()
+    xn = _xn_frame(t(spark, sf_dir, "embeddings").repartition(4)).localCheckpoint(eager=True)
+    cent = _ivf_exact_centroids_cached(spark, sf_dir, xn)
+    assert _ivf_exact_centroids_cached(spark, sf_dir) is cent
+    assert len(_ivf_exact_centroids_cached.cache) == 1
 
 
 def test_stream_session_isolates_shuffle_partitions(spark):

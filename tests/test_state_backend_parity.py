@@ -110,3 +110,24 @@ def test_corrupt_snapshot_marker_is_a_clear_error(spark, graph, tmp_path):
             crawl(spark, seeds, pages=pages, config=CrawlConfig(max_ticks=2, state_dir=str(state_dir)))
         with pytest.raises(ValueError, match="corrupt checkpoint marker"):
             ingest_seeds(spark, seeds, str(state_dir), now_ms=1_700_000_000_000)
+
+
+def test_table_marker_is_one_catalog_lookup(spark, monkeypatch):
+    """A state table's marker reads its tick and clock from one
+    ``DESCRIBE TABLE`` (the streaming shell reads it twice per batch)."""
+    from flink_crawler_spark.operators import state_table
+    from flink_crawler_spark.plans.state_backend import state_backend
+
+    table = "marker_once"
+    _drop_tables(spark, table)
+    try:
+        state = spark.createDataFrame([("http://l1.com/",)], "url string")
+        state_table.save_bucketed_state(state, table, buckets=4)
+        state_table.set_state_tick(spark, table, 7, now_ms=1_700_000_000_123)
+        meta, tables = state_table._meta, []
+        monkeypatch.setattr(state_table, "_meta", lambda s, t: tables.append(t) or meta(s, t))
+        backend = state_backend(spark, CrawlConfig(state_table=table, state_buckets=4))
+        assert backend.marker() == (7, 1_700_000_000_123)
+        assert tables == [table]
+    finally:
+        _drop_tables(spark, table)

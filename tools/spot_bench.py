@@ -1,13 +1,13 @@
 """Per-query steady-state spot bench (r11, round-10 verdict tasks 2+3).
 
 Runs named registry queries for N reps each with bench.py's exact
-per-query discipline (count() materialization, clearCache, temp-view
-drop, gc nudge between reps) after absorbing the session-level one-time
-costs bench.py absorbs in warmup (JVM/codegen, streaming + stateful
-engine init, Python worker handshake). Reports per-rep seconds plus min
-and median — the committed adjudication protocol prefers MIN across
-reps because host interference only ever adds time (SCALE.md r7-r10,
-memory: bench-host-noise-protocol).
+per-query discipline (count() materialization, then bench.py's
+``between_queries`` between reps) after bench.py's own ``warm_session``
+(JVM/codegen, streaming + stateful engine init, Python worker handshake,
+the corpus-snapshot builders), so rep 1 is steady state too. Reports
+per-rep seconds plus min and median — the committed adjudication
+protocol prefers MIN across reps because host interference only ever
+adds time (SCALE.md r7-r10, memory: bench-host-noise-protocol).
 
 Usage:
   python tools/spot_bench.py [--sf-dir DIR] [--reps N] query [query ...]
@@ -18,7 +18,6 @@ Prints one JSON line per query and a trailing summary line.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import statistics
@@ -27,91 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _warm(spark, sf_dir: str) -> None:
-    """The session-level warmups bench.py runs before its timed loop —
-    JVM + Arrow worker, streaming engine, stateful Python worker — so
-    rep 1 measures the query, not spin-up (bench.py:42-114)."""
-    import tempfile
-    import uuid as _uuid
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    warm = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-    warm.groupBy("n_regionkey").count().collect()
-    warm.mapInPandas(lambda it: it, warm.schema).count()
-
-    wdir = tempfile.mkdtemp(prefix="fcs_spot_warm_")
-    warm.limit(3).write.mode("overwrite").parquet(wdir)
-    wstream = spark.readStream.schema(warm.schema).parquet(wdir)
-    wq = (
-        wstream.groupBy("n_regionkey")
-        .count()
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("spot_warm_agg_" + _uuid.uuid4().hex[:6])
-        .trigger(availableNow=True)
-        .start()
-    )
-    wq.awaitTermination()
-
-    def _warm_state(key, pdfs, state):
-        import pandas as pd
-
-        n = sum(len(p) for p in pdfs)
-        yield pd.DataFrame({"k": [int(key[0])], "n": [n]})
-
-    wq2 = (
-        wstream.groupBy("n_regionkey")
-        .applyInPandasWithState(
-            _warm_state,
-            "k long, n long",
-            "n long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("spot_warm_state_" + _uuid.uuid4().hex[:6])
-        .trigger(availableNow=True)
-        .start()
-    )
-    wq2.awaitTermination()
-    # r13: append-mode + watermark engine warm (mirrors bench.py — see
-    # the comment there; measured ~6 s first-run extra otherwise)
-    from pyspark.sql import functions as _Fw
-
-    from flink_crawler_spark.queries.streamq import _stream_session as _ss_warm
-
-    wstream2 = _ss_warm(spark).readStream.schema(warm.schema).parquet(wdir)
-    wq3 = (
-        wstream2.selectExpr(
-            "n_regionkey", "timestamp_seconds(n_regionkey * 60) AS ts_t"
-        )
-        .withWatermark("ts_t", "1 minute")
-        .groupBy(_Fw.window("ts_t", "1 minute"))
-        .count()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("spot_warm_append_" + _uuid.uuid4().hex[:6])
-        .trigger(availableNow=True)
-        .start()
-    )
-    wq3.awaitTermination()
-    for tbl in spark.catalog.listTables():
-        if tbl.isTemporary:
-            spark.catalog.dropTempView(tbl.name)
-    spark.catalog.clearCache()
-
-
-def _between_reps(spark) -> None:
-    """bench.py's inter-query hygiene, verbatim (bench.py:192-211)."""
-    spark.catalog.clearCache()
-    for tbl in spark.catalog.listTables():
-        if tbl.isTemporary:
-            spark.catalog.dropTempView(tbl.name)
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
+from bench import between_queries, warm_session  # noqa: E402
 
 
 def main() -> int:
@@ -126,7 +41,7 @@ def main() -> int:
 
     spark = get_spark("spot_bench")
     spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark, args.sf_dir)
+    warm_session(spark, args.sf_dir)
 
     summary = {}
     for name in args.queries:
@@ -136,7 +51,7 @@ def main() -> int:
             t0 = time.time()
             pair.fn(spark, args.sf_dir).count()
             reps.append(round(time.time() - t0, 3))
-            _between_reps(spark)
+            between_queries(spark)
         rec = {
             "query": name,
             "sf_dir": args.sf_dir,
