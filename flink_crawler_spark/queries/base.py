@@ -31,9 +31,9 @@ def register(name: str, oracle: str | None = None):
 # The corpus-snapshot builders: shared materializations (shingle base,
 # family signatures, clusters, merged crawl state, ...) that several
 # queries consume. A production pipeline builds each once per corpus
-# snapshot, not once per reader; @memo does that per session, and
-# BUILDERS lists every memoized builder so clear_query_caches and the
-# bench warm-up need no hand-kept list.
+# snapshot, not once per reader; @memo does that per session.
+# BUILDERS lists every memoized builder: clear_query_caches empties
+# their stores and bench.py's warm_session builds them.
 BUILDERS: dict[str, Callable] = {}
 
 

@@ -91,11 +91,14 @@ def test_shingle_tables_memoized_per_session_and_corpus(spark, sf_dir):
 
 
 def test_near_dup_clusters_memoized(spark, sf_dir):
+    from flink_crawler_spark.queries import REGISTRY
     from flink_crawler_spark.queries.dedupq import near_dup_clusters
 
     c1 = near_dup_clusters(spark, sf_dir)
     c2 = near_dup_clusters(spark, sf_dir)
     assert c1 is c2
+    # the registered query is the memoized builder itself
+    assert REGISTRY["near_dup_clusters"].fn is near_dup_clusters
 
 
 def _memo_funcs() -> dict[str, tuple[str, str, str]]:
