@@ -260,21 +260,30 @@ NORM_SQL = "(' ' || regexp_replace(lower(coalesce({col}, '')), '\\s+', ' ', 'g')
 # script pre-classifier
 # ---------------------------------------------------------------------------
 
-def script_label_expr(norm: Column) -> Column:
-    """Spark Column: script-based label, NULL => go to the trigram path."""
-    letters = F.regexp_count(norm, F.lit(r"\p{L}")).cast("double")
+def with_script_label(df: DataFrame, norm: str) -> DataFrame:
+    """``df`` plus ``__script``, the script-based label of column ``norm``
+    (NULL => go to the trigram path).
+
+    The letter count and the per-class counts are columns of their own,
+    each computed once: written into the label CASE, every
+    ``regexp_count`` ran again in every branch, and the generated code
+    outgrew the JVM's 64 KB method limit."""
+    counts = {"__letters": F.regexp_count(F.col(norm), F.lit(r"\p{L}"))}
+    counts["__fa"] = F.regexp_count(F.col(norm), F.lit(f"[{FA_CHARS}]"))
+    for i, (_name, java_cls, _duck, _ratio) in enumerate(SCRIPT_RULES):
+        counts[f"__c{i}"] = F.regexp_count(F.col(norm), F.lit(f"[{java_cls}]"))
+    letters = F.col("__letters").cast("double")
     label = F.lit(None).cast("string")
     # build CASE from last rule to first so first match wins
-    for name, java_cls, _duck, ratio in reversed(SCRIPT_RULES):
-        cnt = F.regexp_count(norm, F.lit(f"[{java_cls}]")).cast("double")
-        hit = (letters > 0) & (cnt / letters > ratio)
+    for i, (name, _java, _duck, ratio) in reversed(list(enumerate(SCRIPT_RULES))):
+        hit = (letters > 0) & (F.col(f"__c{i}").cast("double") / letters > ratio)
         if name == "__arab__":
-            fa_cnt = F.regexp_count(norm, F.lit(f"[{FA_CHARS}]"))
-            name_col = F.when(fa_cnt > 0, F.lit("fa")).otherwise(F.lit("ar"))
+            name_col = F.when(F.col("__fa") > 0, F.lit("fa")).otherwise(F.lit("ar"))
         else:
             name_col = F.lit(name)
         label = F.when(hit, name_col).otherwise(label)
-    return F.when(letters == 0, F.lit("und")).otherwise(label)
+    label = F.when(letters == 0, F.lit("und")).otherwise(label)
+    return df.withColumns(counts).withColumn("__script", label).drop(*counts)
 
 
 def script_label_sql(norm_col: str) -> str:
@@ -318,9 +327,9 @@ def detect_lang(
         profile_rows(), "lang string, gram string, w double, prio int, script string"
     )
 
-    base = docs.select(
-        F.col(id_col), norm_expr(F.col(text_col)).alias("__norm")
-    ).withColumn("__script", script_label_expr(F.col("__norm")))
+    base = with_script_label(
+        docs.select(F.col(id_col), norm_expr(F.col(text_col)).alias("__norm")), "__norm"
+    )
 
     # script class for the trigram path: NULL label => latin; routing
     # sentinels => their class; direct labels (ja/zh/.../und) => NULL
@@ -329,22 +338,23 @@ def detect_lang(
         cls = cls.when(F.col("__script") == sentinel, F.lit(cname))
     base = base.withColumn("__scls", cls)
 
-    routed = base.filter(F.col("__scls").isNotNull())
-    grams = routed.select(
+    # the class rides in the exploded join key: a filter or join key on
+    # __scls itself is pushed below the label projections, where it
+    # inlines the label CASE and every regexp_count in it
+    grams = base.select(
         F.col(id_col),
-        F.col("__scls"),
         F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length("__norm") - 2, F.lit(1))),
-                lambda i: F.col("__norm").substr(i, F.lit(3)),
+            F.when(
+                F.col("__scls").isNotNull(),
+                F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.length("__norm") - 2, F.lit(1))),
+                    lambda i: F.concat(F.col("__scls"), F.col("__norm").substr(i, F.lit(3))),
+                ),
             )
-        ).alias("gram"),
+        ).alias("key"),
     )
     scored = (
-        grams.join(
-            F.broadcast(profile),
-            (grams.gram == profile.gram) & (grams.__scls == profile.script),
-        )
+        grams.join(F.broadcast(profile.withColumn("key", F.concat("script", "gram"))), "key")
         .groupBy(id_col, "lang", "prio")
         .agg(F.sum("w").alias("s"))
     )

@@ -76,6 +76,11 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- codegen rotation: the language detector's script label is built
+    # from count columns and its routing class rides in the trigram join
+    # key, so every stage compiles under whole-stage codegen (it fell back
+    # to interpreted evaluation). Value-oracled at sf0.001 + sf0.01.
+    "doc_lang_id",                # functions/lang.py detect_lang
     # --- memo rotation: the nine corpus-snapshot builders share one
     # memo (queries/base.py @memo, keyed on the call's arguments with
     # defaults applied, DataFrame arguments left out); one oracled
@@ -142,7 +147,8 @@ PRIORITY_WINDOW = [
     # unpivot_priority_metrics / weekday_revenue_profile are the four
     # r6 rows left for a future rotation, all bench-green every round;
     # the memo rotation took the slots of the last five,
-    # quartiles_one_pass .. softdedup_loss_weights).
+    # quartiles_one_pass .. softdedup_loss_weights, and the codegen
+    # rotation the slot of price_range_density).
     "pagerank_5iter",
     "quantity_bag_ops",
     "scd2_versioned_revenue",
@@ -171,7 +177,6 @@ PRIORITY_WINDOW = [
     "pivot_priority_by_year",
     "poisson_bootstrap_ci",
     "price_histogram_buckets",
-    "price_range_density",
 ]
 
 

@@ -1,8 +1,7 @@
 """Custom batch DataSource WRITER: the reference's text-content sink
 (``CrawlTopologyBuilder.java:455-463`` — tab-separated ``url \\t text``
 via ``writeAsText``) re-expressed through the PySpark DataSource API
-(Spark 4), completing the custom-connector surface in both directions
-(the seed reader in ``seed_datasource.py`` is the source half).
+(Spark 4), next to the WARC reader in ``warc_datasource.py``.
 
 Two-phase commit: every task writes its partition to a hidden temp file
 and returns the name as its commit message; only the driver-side

@@ -3,16 +3,17 @@
 Reference: the whole point of flink-crawler is ONE always-running job
 continuously fed by ``SeedUrlSource``. Spark-side, continuous operation
 is the streaming shell around the identical per-tick batch logic
-(SURVEY §7): the seed DataSource emits new seed lines per micro-batch
-(offset = file index, checkpointed by Spark), ``foreachBatch`` merges
-them into the durable state table and advances the crawl a few ticks.
+(SURVEY §7): the seed file's lines are staged as one file per
+micro-batch inside the checkpoint and streamed by Spark's built-in file
+source (sources/seeds.py), and ``foreachBatch`` merges each batch into
+the durable state and advances the crawl a few ticks.
 
-Exactly-once seed ingestion comes from the DataSource offset (Spark's
-checkpoint prevents re-delivery), which is the reference's checkpointed
-read index (SeedUrlSource.java:153-166) reborn as stream offsets. A
-batch replayed before its first tick committed replaces its own pending
-seeds (table mode); a later replay re-merges the same rows, which is
-idempotent for already-fetched URLs.
+Exactly-once seed ingestion comes from the file source's offset log
+(Spark's checkpoint prevents re-delivery), which is the reference's
+checkpointed read index (SeedUrlSource.java:153-166) reborn as stream
+offsets. A batch replayed before its first tick committed replaces its
+own pending seeds (table mode); a later replay re-merges the same rows,
+which is idempotent for already-fetched URLs.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.crawl_loop import CrawlConfig, clean_urls, crawl, seeds_to_state
 from ..plans.state_backend import state_backend
+from ..sources.seeds import seed_stream
 
 
 def ingest_seeds(
@@ -78,14 +80,16 @@ def continuous_crawl(
     state_table: str | None = None,
     state_buckets: int = 64,
 ):
-    """Run the crawl as a streaming job fed by the seed DataSource.
+    """Run the crawl as a streaming job fed by the seed file.
 
-    Returns the StreamingQuery. ``available_now=True`` drains one
-    read() worth of seeds and stops (note: a SimpleDataSourceStreamReader
-    snapshot is ONE read call — set seeds_per_batch=0 so the drain covers
-    the whole file). ``available_now=False`` keeps triggering micro-batches
-    (the always-on deployment; stop via query.stop() or
-    processAllAvailable() for tests).
+    Returns the StreamingQuery. Each micro-batch ingests
+    ``seeds_per_batch`` seed lines (0 = the whole file in one batch).
+    ``available_now=True`` drains every seed line of the file and stops;
+    ``available_now=False`` keeps triggering micro-batches (the always-on
+    deployment; stop via query.stop() or processAllAvailable() for
+    tests). A restart with the same ``checkpoint_dir`` ingests only the
+    lines the seed file gained since; a checkpoint written by the old
+    Python seed source is refused (delete it to start over).
 
     State backend: exactly one of ``state_dir`` (per-tick parquet
     snapshots) or ``state_table`` (the BUCKETED catalog table — the
@@ -94,8 +98,6 @@ def continuous_crawl(
     ``CrawlConfig``, so the stream and the batch engine share one state
     backend and one durable URL DB format.
     """
-    from ..sources.seed_datasource import SeedDataSource
-
     if (state_dir is None) == (state_table is None):
         raise ValueError("exactly one of state_dir= / state_table= must be given")
     cfg = replace(
@@ -109,17 +111,7 @@ def continuous_crawl(
     # the backend's public ingest, called by its module-level name
     ingest = ingest_seeds if state_table is None else partial(ingest_seeds_table, buckets=state_buckets)
     empty_seeds = spark.createDataFrame([], "url string, score double")
-    try:
-        spark.dataSource.register(SeedDataSource)
-    except Exception:
-        pass  # already registered in this session
-
-    stream = (
-        spark.readStream.format("seed_source")
-        .option("path", seed_path)
-        .option("batch_size", str(seeds_per_batch))
-        .load()
-    )
+    stream = seed_stream(spark, seed_path, checkpoint_dir, seeds_per_batch)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         # stamp the seeds with the persisted clock: refetch sleep jumps

@@ -74,6 +74,35 @@ def test_restarted_stream_does_not_redeliver_seeds(spark, tmp_path):
     assert rows[0]["status"] == "FETCHED"
 
 
+def test_available_now_drains_one_seed_per_batch(spark, tmp_path):
+    """``available_now=True`` with one seed per micro-batch ingests every
+    seed of the file, one per batch, and then stops."""
+    adjacency = {"http://n1.com/": [], "http://n2.com/": [], "http://n3.com/": []}
+    pages = render_pages(web_graph_from_adjacency(spark, adjacency)).localCheckpoint(eager=True)
+    seed_file = tmp_path / "seeds.txt"
+    seed_file.write_text("http://n1.com/\n# skipped\nhttp://n2.com/ 2.0\nhttp://n3.com/\n")
+    state_dir = str(tmp_path / "state")
+
+    q = continuous_crawl(
+        spark,
+        seed_path=str(seed_file),
+        pages=pages,
+        state_dir=state_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        config=CrawlConfig(collect_stats=False),
+        ticks_per_batch=1,
+        seeds_per_batch=1,
+        available_now=True,
+    )
+    assert q.awaitTermination(300)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [1, 1, 1]
+
+    tick = int(open(os.path.join(state_dir, "_LATEST")).read().split()[0])
+    state = spark.read.parquet(os.path.join(state_dir, f"state_t{tick}"))
+    st = {r["url"]: r["status"] for r in state.collect()}
+    assert st == {u: "FETCHED" for u in adjacency}
+
+
 def test_url_db_per_domain_timers(spark, tmp_path):
     """Per-domain processing-time timers (UrlDBFunction.java:192-235):
     each domain's timer re-arms and admits its best UNFETCHED URL as

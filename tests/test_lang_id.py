@@ -127,3 +127,20 @@ def test_detect_lang_oracle_twin_nonlatin(duck=None):
     got = dict(con.execute(sql).fetchall())
     want = {i: e for i, _, e in NONLATIN_SAMPLES}
     assert got == want
+
+
+def test_detect_lang_compiles_under_whole_stage_codegen(spark):
+    """Every stage of the detector fits the JVM's 64 KB method limit:
+    with the interpreted fallback off, an oversized stage raises instead
+    of silently running interpreted."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t, _ in SAMPLES + NONLATIN_SAMPLES], "doc_id long, text string"
+    )
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = {r["doc_id"]: r["detected_lang"] for r in detect_lang(docs).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == {i: e for i, _, e in SAMPLES + NONLATIN_SAMPLES}

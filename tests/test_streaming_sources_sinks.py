@@ -1,4 +1,4 @@
-"""Streaming UrlDB state, seed DataSource, WARC sink, CLI."""
+"""Streaming UrlDB state, seed stream, WARC sink, CLI."""
 
 from __future__ import annotations
 
@@ -77,7 +77,7 @@ def test_merge_one_matches_batch_lattice():
 
 
 # ----------------------------------------------------------------------
-# seed DataSource (PySpark DataSource API)
+# seed stream (staged seed files, built-in file source)
 # ----------------------------------------------------------------------
 
 
@@ -88,28 +88,102 @@ def seed_file(tmp_path):
     return str(p)
 
 
-def test_seed_datasource_streams_all_seeds(spark, seed_file, tmp_path):
-    from flink_crawler_spark.sources.seed_datasource import SeedDataSource
+def _drain(spark, seed_path, ckpt, per_batch=0):
+    """Run the seed stream to the end of its staged files; the rows of
+    each micro-batch, in batch order."""
+    from flink_crawler_spark.sources.seeds import seed_stream
 
-    spark.dataSource.register(SeedDataSource)
-    stream = spark.readStream.format("seed_source").option("path", seed_file).load()
+    batches = {}
     q = (
-        stream.writeStream.format("memory")
-        .queryName("seeds_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
+        seed_stream(spark, seed_path, ckpt, per_batch)
+        .writeStream.foreachBatch(lambda df, i: batches.update({i: df.collect()}))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    rows = {r["url"]: r["score"] for r in spark.table("seeds_test").collect()}
-    assert rows == {"http://a.com/": 2.5, "http://b.com/": 1.0, "http://c.com/": 0.5}
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    return [[(r["url"], r["score"]) for r in batches[i]] for i in sorted(batches)]
 
 
-def test_seed_datasource_requires_path(spark):
-    from flink_crawler_spark.sources.seed_datasource import SeedStreamReader
+def test_seed_stream_streams_all_seeds(spark, seed_file, tmp_path):
+    (rows,) = _drain(spark, seed_file, str(tmp_path / "ckpt2"))
+    assert dict(rows) == {"http://a.com/": 2.5, "http://b.com/": 1.0, "http://c.com/": 0.5}
 
-    with pytest.raises(ValueError, match="path"):
-        SeedStreamReader({})
+
+def test_seed_stream_requires_seed_file(spark, tmp_path):
+    from flink_crawler_spark.sources.seeds import seed_stream
+
+    with pytest.raises(FileNotFoundError, match="missing.txt"):
+        seed_stream(spark, str(tmp_path / "missing.txt"), str(tmp_path / "ckpt"), 0)
+
+
+def test_seed_file_readers_agree(spark, tmp_path):
+    """The CLI's batch reader and the streaming source share one parse:
+    scores, tabs, indented comments and whitespace-only lines."""
+    from flink_crawler_spark.sources.seeds import seeds_from_text
+
+    p = tmp_path / "seeds.txt"
+    p.write_text(
+        "# head\n  # indented comment\n\t#tab comment\n \t \n\n"
+        "http://a.com/ 2.5\n\thttp://b.com/\t0.25\t\n  http://c.com/x  \n"
+        "http://d.com/\t\n"
+    )
+    want = [
+        ("http://a.com/", 2.5), ("http://b.com/", 0.25),
+        ("http://c.com/x", 1.0), ("http://d.com/", 1.0),
+    ]
+    batch = sorted((r["url"], r["score"]) for r in seeds_from_text(spark, str(p)).collect())
+    streamed = _drain(spark, str(p), str(tmp_path / "ckpt"))
+    assert batch == want
+    assert [sorted(b) for b in streamed] == [want]
+
+
+def test_seed_score_must_be_a_number(spark, tmp_path):
+    from flink_crawler_spark.sources.seeds import seeds_from_text
+
+    p = tmp_path / "seeds.txt"
+    p.write_text("http://a.com/ high\n")
+    with pytest.raises(Exception, match="seed score is not a number"):
+        seeds_from_text(spark, str(p)).collect()
+
+
+def test_seed_stream_restart_delivers_only_new_lines(spark, tmp_path):
+    """A restart on the same checkpoint after the seed file grew delivers
+    exactly the new lines, one per micro-batch, and leaves every staged
+    file as it was."""
+    p = tmp_path / "seeds.txt"
+    p.write_text("http://a.com/\nhttp://b.com/ 2.0\n")
+    ckpt = str(tmp_path / "ckpt")
+    assert _drain(spark, str(p), ckpt, 1) == [[("http://a.com/", 1.0)], [("http://b.com/", 2.0)]]
+    seeds_dir = os.path.join(ckpt, "seeds")
+    before = {n: os.stat(os.path.join(seeds_dir, n)) for n in os.listdir(seeds_dir)}
+
+    p.write_text("http://a.com/\nhttp://b.com/ 2.0\n# grown\nhttp://c.com/\nhttp://d.com/ 3\n")
+    got = _drain(spark, str(p), ckpt, 1)
+    assert got == [[("http://c.com/", 1.0)], [("http://d.com/", 3.0)]]
+    after = {n: os.stat(os.path.join(seeds_dir, n)) for n in os.listdir(seeds_dir)}
+    assert len(after) == 4
+    for n, st in before.items():
+        assert (after[n].st_ino, after[n].st_mtime_ns, after[n].st_size) == (
+            st.st_ino, st.st_mtime_ns, st.st_size
+        )
+    assert _drain(spark, str(p), ckpt, 1) == []  # nothing new: nothing delivered
+
+
+def test_old_seed_source_checkpoint_is_a_clear_error(spark, tmp_path):
+    """A checkpoint the Python seed DataSource wrote has offsets but no
+    staged seeds; resuming it fails at once and names the fix."""
+    from flink_crawler_spark.sources.seeds import seed_stream
+
+    p = tmp_path / "seeds.txt"
+    p.write_text("http://a.com/\n")
+    ckpt = tmp_path / "ckpt"
+    (ckpt / "offsets").mkdir(parents=True)
+    (ckpt / "offsets" / "0").write_text('v1\n{}\n{"index":1}\n')
+    with pytest.raises(ValueError, match="delete the checkpoint"):
+        seed_stream(spark, str(p), str(ckpt), 0)
+    assert not (ckpt / "seeds").exists()
 
 
 # ----------------------------------------------------------------------
