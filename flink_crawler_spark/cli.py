@@ -1,9 +1,10 @@
 """CrawlTool CLI — argparse mirror of the reference's launcher.
 
 Reference: ``tools/CrawlTool.java:37-122`` + ``tools/CrawlToolOptions.java:33-143``.
-Same flags where they make sense on Spark (those that exist only because
-of Flink runtime mechanics — ``-fetcherspertask``, ``-checkpointdir`` for
-iteration state — are subsumed by Spark configs / the state table).
+Same flags where they make sense on Spark. ``--checkpointdir`` keeps its
+role: it is the root directory of the durable URL-DB state log
+(operators/state_table.py), and a rerun with the same directory resumes
+from its last commit marker, in a new process.
 
 The mock-service tables (pages/robots/sitemaps/redirects) are parquet
 paths; omit them for a no-robots crawl of just the pages table. A real
@@ -72,7 +73,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--stateout", default=None, help="dir to write the final crawl_state parquet")
     p.add_argument(
         "--checkpointdir", default=None,
-        help="durable per-tick state dir; rerun with the same dir to resume",
+        help="durable state-log root dir; rerun with the same dir to resume",
     )
     p.add_argument("--maxticks", type=int, default=10, help="max crawl-loop iterations")
     p.add_argument("--htmlonly", action="store_true", help="only parse text/html pages")

@@ -18,11 +18,11 @@ the merge of the tick's updates back into it.
            crawl_state = backend.advance(crawl_state, updates)  # O2/§2.5
 
 The loop holds only that dataflow. Where the state lives — in memory,
-``state_dir`` snapshots, the bucketed ``state_table`` or its LSM log
-(``state_log_every``) — is the state backend's business
+or in the durable bucketed state log named by ``state_table`` or
+``state_dir`` — is the state backend's business
 (``plans/state_backend.py``), picked once per crawl from those
 ``CrawlConfig`` fields: it resumes and seeds the state, merges and
-persists each tick, and owns the two rules in which the modes differ
+persists each tick, and owns the two rules in which the backends differ
 (when the tick's caches are consumed, and whether the per-tick status
 counters arrive the same tick or one tick in arrears).
 
@@ -114,41 +114,36 @@ class CrawlConfig:
     collect_stats: bool = True  # per-tick status counts (df.observe — rides the tick job)
     # Durable state: these fields pick the state backend, once per crawl
     # (plans/state_backend.py::state_backend). Neither: in memory, no
-    # resume. state_dir: a parquet snapshot state_t<N> per tick that
-    # admitted URLs, named by the _LATEST marker ("tick now_ms").
+    # resume. Either one: the URL DB is a state log bucketed by url
+    # (operators/state_table.py), so the tick merge is a bucket-local
+    # sort-merge join whose ONLY Exchange is the small per-tick delta's,
+    # instead of a union re-aggregation that re-shuffles the ENTIRE state
+    # every tick (tens of TB per tick at the reference's 100 B-link
+    # design scale, UrlDBFunction.java:94-139). A tick writes ONE small
+    # delta directory (O(delta)) and commits a marker file; every
+    # state_log_every ticks (None = 4) compaction folds the deltas into a
+    # new base, amortizing the full rewrite 1/N. A crawl resumes from the
+    # last commit marker, in a new process too. Its status counters ride
+    # the next tick's frontier scan, so stats entries are finalized one
+    # tick in arrears. state_dir is the log's root directory (the CLI's
+    # --checkpointdir); state_table=NAME roots it at <warehouse>/NAME.
     state_dir: str | None = None
-    keep_checkpoints: int | None = 3  # retention: newest N state_t* snapshots (None = keep all)
-    # state_table (the 100 TB path; exclusive with state_dir): the URL DB
-    # as a catalog table bucketed by url (operators/state_table.py). The
-    # tick merge is then a bucket-local sort-merge join whose ONLY
-    # Exchange is the small per-tick delta's, instead of a union
-    # re-aggregation that re-shuffles the ENTIRE state every tick (tens of
-    # TB per tick at the reference's 100 B-link design scale,
-    # UrlDBFunction.java:94-139). The table is the checkpoint: a
-    # crash-safe staged swap per tick, the tick stamped on the table.
-    state_table: str | None = None
+    state_table: str | None = None  # exclusive with state_dir
     state_buckets: int = 64  # physical layout constant — size for END state
-    # LSM log mode on top of state_table: each tick writes ONE small
-    # delta directory (O(delta) write) and the state is read as
-    # base ⋈ merge(deltas) — still bucket-local; every N ticks the view
-    # compacts into the base with the crash-safe swap, amortizing the
-    # full rewrite 1/N. Its status counters ride the next tick's frontier
-    # scan, so stats entries are finalized one tick in arrears. None =
-    # a rewrite swap per tick.
     state_log_every: int | None = None
     # Long-crawl lineage bounding. The loop accumulates per-tick trace /
     # parsed / domain-score frames; left lazy, each holds a reference to
-    # that tick's checkpointed state (or, with a state table, to a
-    # table version that no longer exists after the swap), so a
+    # that tick's checkpointed state (or, with a durable state, to a
+    # base that a later compaction sweeps away), so a
     # 1,000-tick continuous crawl — the reference's operating mode,
     # CrawlTopologyBuilder.java:250-466 — grows memory and plan-analysis
     # cost without bound. With compaction ON, each tick folds its
     # history into small eagerly-checkpointed frames (one tiny extra job
-    # per tick) and per-tick cost stays flat. None = auto: on when
-    # state_table is set (required there: the swap evicts the caches and
-    # deletes the files lazy frames read) or the crawl is long
-    # (max_ticks > 50); off for short bench loops where the extra
-    # per-tick job costs more than it saves.
+    # per tick) and per-tick cost stays flat. None = auto: on when the
+    # state is durable (state_table or state_dir; required there: a new
+    # base evicts the caches and its sweep deletes the files lazy frames
+    # read) or the crawl is long (max_ticks > 50); off for short bench
+    # loops where the extra per-tick job costs more than it saves.
     compact_history: bool | None = None
     keep_parsed: bool | None = None  # accumulate full parse output across
     # ticks (res.parsed). None = auto: off under compaction (a
@@ -225,6 +220,7 @@ def crawl(
     config: CrawlConfig | None = None,
     scorer: PageScorer = all_equal_scorer,
     start_ms: int = 1_700_000_000_000,
+    marker=None,
 ) -> CrawlResult:
     """Run the crawl loop against fixture/service tables until idle.
 
@@ -234,7 +230,9 @@ def crawl(
     rows replace the mock join entirely — the CommonCrawl archive
     fetcher (`operators/commoncrawl.py::commoncrawl_fetch_fn`) plugs in
     here; every other stage is identical. Exactly one of ``pages`` /
-    ``fetch_fn`` must be given.
+    ``fetch_fn`` must be given. ``marker`` is the durable state's commit
+    marker when the caller has just read it (the streaming shell); None
+    reads it.
     """
     if (pages is None) == (fetch_fn is None):
         raise ValueError("exactly one of pages= / fetch_fn= must be given")
@@ -280,6 +278,7 @@ def crawl(
             config=config,
             scorer=scorer,
             start_ms=start_ms,
+            marker=marker,
         )
     finally:
         for k, v in saved.items():
@@ -301,6 +300,7 @@ def _crawl_body(
     config: CrawlConfig | None,
     scorer: PageScorer,
     start_ms: int,
+    marker,
 ) -> CrawlResult:
     cfg = config or CrawlConfig()
     backend = state_backend(spark, cfg)
@@ -344,9 +344,9 @@ def _crawl_body(
     # Durable state (reference: Flink checkpointing, CrawlTool.java:60-64
     # — AT_LEAST_ONCE with possible in-flight loss on iterations). Here a
     # durable backend's persisted state is the checkpoint: each tick
-    # replaces it atomically, so restart resumes from the last completed
+    # commits atomically, so restart resumes from the last completed
     # tick with exactly-once effects — strictly stronger.
-    opened = backend.open()
+    opened = backend.open(marker)
     if opened is None:
         start_tick, now_ms = 0, start_ms
         # seed ingestion (tick 0); merge immediately: distinct seeds can
@@ -644,18 +644,10 @@ def _crawl_body(
             break
         crawl_state = step.state
         if step.frontier == 0:
-            if (
-                cfg.refetch
-                and step.due_ms is not None
-                and step.due_ms > now_ms
-                and tick < cfg.max_ticks
-            ):
-                # nothing admissible NOW, but a refetch timer is set:
-                # sleep the clock forward so the next tick lands on the
-                # due time (Flink's per-key timer semantics — the loop
-                # sleeps to the next timer instead of running empty
-                # dataflows until it arrives)
-                now_ms = max(now_ms, step.due_ms - cfg.tick_ms)
+            if step.sleep_ms is not None:
+                # nothing admissible NOW, but a refetch timer is set: the
+                # next tick lands on its due time
+                now_ms = step.sleep_ms
                 continue
             # terminal tick: updates were empty, so the merge was an
             # identity (singleton merge groups); stop like the

@@ -4,47 +4,48 @@ The reference keeps its URL DB in one keyed-state operator with one
 checkpoint mechanism (``functions/UrlDBFunction.java``); Structured
 Streaming's operators likewise see one versioned state-store interface
 with the storage format behind it. Here ``state_backend`` picks one of
-four backends, once per crawl, from the ``CrawlConfig`` fields:
+two backends, once per crawl, from the ``CrawlConfig`` fields:
 
-  =============================  =================  ===========================
-  CrawlConfig                    backend            a tick persists as
-  =============================  =================  ===========================
-  neither field                  _MemoryBackend     a localCheckpoint (no resume)
-  state_dir                      _SnapshotBackend   + parquet ``state_t<N>``,
-                                                    ``_LATEST``, retention
-  state_table                    _TableBackend      a bucketed-table rewrite swap
-  state_table + state_log_every  _LogBackend        a delta, compacted every N
-  =============================  =================  ===========================
+  ==========================  ==============  ==============================
+  CrawlConfig                 backend         a tick persists as
+  ==========================  ==============  ==============================
+  neither field               _MemoryBackend  a localCheckpoint (no resume)
+  state_table or state_dir    _LogBackend     a delta and a commit marker,
+                                              compacted every
+                                              ``state_log_every`` (4) ticks
+  ==========================  ==============  ==============================
+
+``state_table=NAME`` and ``state_dir=PATH`` are the same durable log
+(operators/state_table.py): the first keeps its root at
+``<warehouse>/NAME``, the second is rooted at PATH under a name derived
+from it. Either resumes in a new process from the commit marker.
 
 Every backend offers what the crawl loop and the streaming shell do with
-state: ``open`` (resume: state, tick, clock — or None), ``marker`` (just
-the tick and clock, no state read), ``seed`` (the tick-0 state),
+state: ``open`` (resume: state, tick, clock — or None), ``marker`` (the
+commit marker, no state read), ``seed`` (the tick-0 state),
 ``frontier`` (select the tick's frontier from the state), ``advance``
 (merge one tick's updates and persist the tick), ``close`` (the stats
 entries still owed when the loop ends) and ``ingest`` (one streamed
-seed micro-batch; durable backends only).
+seed micro-batch; the log backend only).
 
-The two real differences between the modes are what the backends do:
+The two real differences between the backends:
 
-  * Cache consumption. A table swap refreshes the table relation, which
-    evicts every cached frame derived from it, so the table backends
-    count the frontier and fold the tick's history (``fold``) BEFORE
-    they write; that count job materializes the tick's caches and the
-    write reuses them. The in-memory backends run their checkpoint job
-    first (it materializes the caches) and consume them after it.
-  * Stats lag. The status counters ride the job that already scans the
-    state: the checkpoint job or the rewrite swap, giving post-merge
-    counts the same tick. The log backend has no full-state write, so
-    its counters ride the next tick's frontier scan of the state view:
-    each tick's entry is finalized one tick in arrears, and the last one
-    by a single aggregation when the loop ends.
+  * Cache consumption. A new base re-points the table, which evicts
+    every cached frame derived from it, so the log backend counts the
+    frontier and folds the tick's history (``fold``) BEFORE it writes;
+    that count job materializes the tick's caches and the write reuses
+    them. The in-memory backend runs its checkpoint job first (it
+    materializes the caches) and consumes them after it.
+  * Stats lag. The in-memory backend's status counters ride its
+    checkpoint job, giving post-merge counts the same tick. The log
+    backend has no full-state write, so its counters ride the next
+    tick's frontier scan of the state view: each tick's entry is
+    finalized one tick in arrears, and the last one by a single
+    aggregation when the loop ends.
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
 import time
 from functools import cached_property
 from typing import NamedTuple
@@ -54,15 +55,15 @@ from pyspark.sql import functions as F
 
 from ..operators.merge import merge_crawl_state, merge_updates
 from ..operators.state_table import (
+    Marker,
     compact_state_log,
     get_state_marker,
     load_bucketed_state,
     read_state_log,
     save_bucketed_state,
-    set_state_tick,
     stage_pending_seeds,
+    state_dir_table,
     tick_append_log,
-    tick_merge_bucketed,
 )
 from ..schemas import FETCH_STATUSES
 
@@ -72,7 +73,7 @@ class Tick(NamedTuple):
 
     state: DataFrame | None  # None: the state was already final, the tick did not run
     frontier: int  # URLs admitted this tick
-    due_ms: int | None  # earliest refetch due time among FETCHED rows (refetch mode)
+    sleep_ms: int | None  # the clock an empty refetch tick sleeps to (None: no sleep)
     stats: list[dict]  # the stats entries this tick finalized
     done: bool  # no UNFETCHED row is left and refetch is off: no later tick can admit
 
@@ -81,17 +82,16 @@ def state_backend(spark: SparkSession, cfg) -> _MemoryBackend:
     """The backend the config names; the only reader of the state fields."""
     if cfg.state_table is not None and cfg.state_dir is not None:
         raise ValueError("state_table and state_dir are mutually exclusive")
-    if cfg.state_log_every is not None and cfg.state_table is None:
-        raise ValueError("state_log_every requires state_table")
-    if cfg.state_table is None:
-        return (_MemoryBackend if cfg.state_dir is None else _SnapshotBackend)(spark, cfg)
+    if cfg.state_table is None and cfg.state_dir is None:
+        if cfg.state_log_every is not None:
+            raise ValueError("state_log_every requires state_table or state_dir")
+        return _MemoryBackend(spark, cfg)
     if cfg.compact_history is False:
-        # not a preference in table mode: lazy trace/parsed frames would
-        # reference table versions whose files the next tick's swap
-        # deletes — evaluating them later crashes or reads wrong data
-        raise ValueError("state_table requires compact_history (got False)")
-    return (_LogBackend if cfg.state_log_every else _TableBackend)(spark, cfg)
-
+        # not a preference for a durable state: lazy trace/parsed frames
+        # would reference bases whose files a later compaction deletes —
+        # evaluating them later crashes or reads wrong data
+        raise ValueError("state_table and state_dir require compact_history (got False)")
+    return _LogBackend(spark, cfg)
 
 def _observed_count(obs, *, wait_s: float = 2.0) -> int | None:
     """The first metric of a one-count Observation, or None when it has
@@ -123,11 +123,6 @@ def _obs_counts(metrics: dict) -> dict:
     }
 
 
-def _due_ms(metrics: dict) -> int | None:
-    v = metrics.get("__min_nft")
-    return int(v) if v is not None else None
-
-
 def _release(caches: list[DataFrame]) -> None:
     for f in caches:
         f.unpersist()
@@ -136,8 +131,9 @@ def _release(caches: list[DataFrame]) -> None:
 class _MemoryBackend:
     """The state lives in localCheckpoint blocks; nothing is durable."""
 
-    # the state is a table whose swap evicts cached frames and deletes
-    # the files older lazy frames read (the loop then compacts history)
+    # the state is a table whose new bases evict cached frames and whose
+    # sweeps delete the files older lazy frames read (the loop then
+    # compacts history)
     evicts_caches = False
 
     def __init__(self, spark: SparkSession, cfg) -> None:
@@ -159,18 +155,29 @@ class _MemoryBackend:
             aggs.append(F.min(F.when(F.col("status") == "FETCHED", F.col("next_fetch_time"))).alias("__min_nft"))
         return aggs
 
-    def marker(self) -> tuple[int, int | None] | None:
-        """(tick, clock) of the committed state, None when there is none;
-        the clock is None when it was never persisted."""
+    def marker(self) -> Marker | None:
+        """The commit marker of the durable state, None when there is none."""
         return None
 
-    def open(self) -> tuple[DataFrame, int, int | None] | None:
-        """(state, tick, clock) to resume from, None for a fresh crawl."""
-        m = self.marker()
-        return None if m is None else (self._load(m[0]), *m)
+    def open(self, marker: Marker | None = None) -> tuple[DataFrame, int, int | None] | None:
+        """(state, tick, clock) to resume from, None for a fresh crawl;
+        ``marker`` when the caller has just read it. The clock is None
+        when it was never persisted."""
+        return None
 
     def seed(self, seeded: DataFrame) -> DataFrame:
         return seeded.localCheckpoint(eager=True)
+
+    def _sleep_ms(self, tick: int, now_ms: int, n: int, metrics: dict) -> int | None:
+        """Where the clock sleeps after a tick that admitted nothing while
+        a refetch timer is set: to the tick before the earliest due time
+        among FETCHED rows (Flink's per-key timer semantics — the loop
+        sleeps to the next timer instead of running empty dataflows
+        until it arrives). None: the loop does not sleep."""
+        due = metrics.get("__min_nft")
+        if n > 0 or not self.cfg.refetch or due is None or due <= now_ms or tick >= self.cfg.max_ticks:
+            return None
+        return max(now_ms, int(due) - self.cfg.tick_ms)
 
     def frontier(self, state: DataFrame, tick: int, select) -> DataFrame:
         """``select(state)``, carrying what this backend observes."""
@@ -200,193 +207,62 @@ class _MemoryBackend:
         n = (self._front_obs is not None and _observed_count(self._front_obs)) or frontier.count()
         fold()
         _release(caches)
-        if n > 0:
-            self._persist(new_state, tick, now_ms)
-        return self._tick(tick, new_state, n, obs)
-
-    def _persist(self, state: DataFrame, tick: int, now_ms: int) -> None:
-        pass
-
-    def _tick(self, tick: int, state: DataFrame, n: int, obs: Observation | None) -> Tick:
-        """The tick's report from post-merge counters; a tick that admits
-        nothing is the terminal one and records no stats entry."""
+        # a tick that admits nothing is the terminal one and records no
+        # stats entry
         metrics = dict(obs.get) if obs is not None else {}
+        sleep_ms = self._sleep_ms(tick, now_ms, n, metrics)
         if not (self.cfg.collect_stats and n > 0):
-            return Tick(state, n, _due_ms(metrics), [], False)
+            return Tick(new_state, n, sleep_ms, [], False)
         counts = _obs_counts(metrics)
         # frontier admission is UNFETCHED-only (FetchQueue semantics), so
         # none left means no later tick can admit; in refetch mode FETCHED
         # rows re-enter when due and the empty frontier ends the crawl
         done = counts.get("UNFETCHED", 0) == 0 and not self.cfg.refetch
-        return Tick(state, n, _due_ms(metrics), [{"tick": tick, "frontier": n, "status_counts": counts}], done)
+        entry = {"tick": tick, "frontier": n, "status_counts": counts}
+        return Tick(new_state, n, sleep_ms, [entry], done)
 
     def close(self, state: DataFrame) -> list[dict]:
         """Stats entries still owed when the loop ends."""
         return []
 
 
-def _latest_marker(state_dir: str) -> tuple[int, int | None] | None:
-    """(tick, now_ms) from a snapshot directory's ``_LATEST`` marker,
-    None when there is none. Format: "tick now_ms", or the pre-clock
-    single-token "tick" (now_ms None)."""
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as fh:
-        content = fh.read().strip()
-    try:
-        parts = content.split()
-        return int(parts[0]), (int(parts[1]) if len(parts) > 1 else None)
-    except (ValueError, IndexError):
-        raise ValueError(
-            f"corrupt checkpoint marker {marker!r} (contents {content!r}); "
-            "delete the state_dir to restart from seeds"
-        ) from None
-
-
-class _SnapshotBackend(_MemoryBackend):
-    """The in-memory loop plus a parquet snapshot ``state_t<N>`` of every
-    tick that admitted URLs, named by the ``_LATEST`` marker."""
-
-    def __init__(self, spark: SparkSession, cfg) -> None:
-        super().__init__(spark, cfg)
-        self.dir = cfg.state_dir
-
-    def _path(self, tick: int) -> str:
-        return os.path.join(self.dir, f"state_t{tick}")
-
-    def marker(self) -> tuple[int, int | None] | None:
-        return _latest_marker(self.dir)
-
-    def _load(self, tick: int) -> DataFrame:
-        # eager: lazy trace frames must not read a snapshot the retention
-        # sweep (or a seed ingest) later replaces
-        return self.spark.read.parquet(self._path(tick)).localCheckpoint(eager=True)
-
-    def _commit(self, state: DataFrame, tick: int, now_ms: int) -> None:
-        """Write the snapshot, then flip the marker to it (atomically)."""
-        state.write.mode("overwrite").parquet(self._path(tick))
-        tmp = os.path.join(self.dir, "_LATEST.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"{tick} {now_ms}")  # tick + simulated clock
-        os.replace(tmp, os.path.join(self.dir, "_LATEST"))
-
-    def _persist(self, state: DataFrame, tick: int, now_ms: int) -> None:
-        self._commit(state, tick, now_ms)
-        # retention: keep the newest keep_checkpoints snapshots (older ones
-        # only serve manual rollback). Sweep AFTER the marker flips, so a
-        # crash mid-sweep still leaves a consistent latest.
-        keep = self.cfg.keep_checkpoints
-        if keep is not None and keep >= 1:
-            snaps = sorted(
-                int(m.group(1)) for d in os.listdir(self.dir) if (m := re.fullmatch(r"state_t(\d+)", d))
-            )
-            for old in snaps[:-keep]:
-                shutil.rmtree(self._path(old), ignore_errors=True)
-
-    def ingest(self, obs: DataFrame, *, now_ms: int) -> int:
-        """Merge seed observations into the snapshot the marker names
-        (``state_t0`` when there is none); returns its tick."""
-        m = self.marker()
-        if m is None:
-            state, tick, clock = merge_crawl_state(obs), 0, None
-        else:
-            tick, clock = m
-            # materialize + cut lineage BEFORE overwriting the path it reads
-            state = merge_updates(self.spark.read.parquet(self._path(tick)), obs).localCheckpoint(eager=True)
-        os.makedirs(self.dir, exist_ok=True)
-        # keep a persisted clock: a refetch-mode crawl may have sleep-jumped
-        # it past tick*tick_ms, and the resume would otherwise rewind
-        self._commit(state, tick, clock if clock is not None else now_ms)
-        return tick
-
-
-class _TableBackend(_MemoryBackend):
-    """The URL DB as a bucketed catalog table (operators/state_table.py):
-    each tick join-merges its updates bucket-locally and swaps the result
-    in crash-safely, the tick stamped on the new table."""
+class _LogBackend(_MemoryBackend):
+    """The durable state log (operators/state_table.py): a tick writes one
+    delta-sized directory and commits, reads see base ⋈ merge(deltas), and
+    every ``state_log_every`` ticks compaction folds the deltas into a new
+    base."""
 
     evicts_caches = True
 
     def __init__(self, spark: SparkSession, cfg) -> None:
         super().__init__(spark, cfg)
-        self.table, self.buckets = cfg.state_table, cfg.state_buckets
-
-    def _exists(self) -> bool:
-        catalog = self.spark.catalog
-        return catalog.tableExists(self.table) or catalog.tableExists(f"{self.table}__old")
-
-    def marker(self) -> tuple[int, int | None] | None:
-        if not self._exists():
-            return None
-        # restore the live name from __old first: a crash inside a swap
-        # leaves only the backup, and the table carries the marker
-        load_bucketed_state(self.spark, self.table)
-        return get_state_marker(self.spark, self.table)
-
-    def _load(self, tick: int) -> DataFrame:
-        # always the log view: a table run in log mode may carry
-        # committed-but-uncompacted deltas and pending seeds, which the
-        # bare base would drop
-        return read_state_log(self.spark, self.table)
-
-    def seed(self, seeded: DataFrame) -> DataFrame:
-        save_bucketed_state(seeded, self.table, buckets=self.buckets)
-        set_state_tick(self.spark, self.table, 0)
-        return load_bucketed_state(self.spark, self.table)
-
-    def frontier(self, state: DataFrame, tick: int, select) -> DataFrame:
-        return select(state)
-
-    def advance(self, state, updates, *, tick, now_ms, frontier, caches, fold) -> Tick:
-        # consume the caches before the swap evicts them; this count
-        # materializes them and the merge write reuses them
-        n = frontier.count()
-        fold()
-        obs = Observation(f"state_t{tick}") if self.aggs else None
-        # the only Exchange in the merge is the delta's; the tick is
-        # stamped on the staging table, so it swaps in with the data
-        new_state = tick_merge_bucketed(
-            self.spark,
-            self.table,
-            updates,
-            buckets=self.buckets,
-            merged_transform=(lambda df: df.observe(obs, *self.aggs)) if obs is not None else None,
-            tick=tick,
-            now_ms=now_ms,
-        )
-        _release(caches)
-        return self._tick(tick, new_state, n, obs)
-
-    def ingest(self, obs: DataFrame, *, now_ms: int) -> int:
-        """Stage merged seed observations as the seeds pending for the
-        next tick (creating the table at tick 0 if there is none); returns
-        the completed-tick counter, which seed ingestion does not advance."""
-        seeds = merge_crawl_state(obs)
-        if self._exists():
-            return stage_pending_seeds(self.spark, self.table, seeds)
-        save_bucketed_state(seeds, self.table, buckets=self.buckets)
-        set_state_tick(self.spark, self.table, 0, now_ms=now_ms)
-        return 0
-
-
-class _LogBackend(_TableBackend):
-    """The table backend with an LSM log: a tick writes one delta-sized
-    directory, reads see base ⋈ merge(deltas), and every
-    ``state_log_every`` ticks compaction folds the deltas into the base."""
-
-    def __init__(self, spark: SparkSession, cfg) -> None:
-        super().__init__(spark, cfg)
-        self.every = cfg.state_log_every
+        self.table = cfg.state_table or state_dir_table(cfg.state_dir)
+        self.buckets, self.every = cfg.state_buckets, cfg.state_log_every or 4
+        self.m: Marker | None = None  # the last marker read or committed
         self._state_obs: Observation | None = None
         self._pending: dict | None = None  # the tick whose counts have not arrived
+
+    def marker(self) -> Marker | None:
+        self.m = get_state_marker(self.spark, self.table)
+        return self.m
+
+    def open(self, marker: Marker | None = None) -> tuple[DataFrame, int, int | None] | None:
+        m = self.m = marker or self.marker()
+        # always the log view: committed-but-uncompacted deltas and
+        # pending seeds fold in, which the bare base would drop
+        return None if m is None else (read_state_log(self.spark, self.table, marker=m), m.tick, m.clock)
+
+    def seed(self, seeded: DataFrame) -> DataFrame:
+        self.m = save_bucketed_state(seeded, self.table, buckets=self.buckets)
+        return load_bucketed_state(self.spark, self.table, marker=self.m)
 
     def frontier(self, state: DataFrame, tick: int, select) -> DataFrame:
         # no full-state write to ride, but the frontier scans the state
         # view anyway: the counters ride that scan, so they describe the
         # PRE-merge state (= last tick's post-merge state). The refetch
         # due-timer is only read on empty-frontier ticks, where the merge
-        # is an identity and pre == post.
+        # is an identity and pre == post — so a sleep is known before
+        # the tick commits.
         self._state_obs = None
         if self.aggs:
             self._state_obs = Observation(f"state_scan_t{tick}")
@@ -408,15 +284,20 @@ class _LogBackend(_TableBackend):
                 # tick was the last one that worked
                 _release(caches)
                 return Tick(None, n, None, stats, True)
-        tick_append_log(self.spark, self.table, updates, buckets=self.buckets, tick=tick, now_ms=now_ms)
+        # a sleeping tick commits the clock it sleeps to: a crawl resumed
+        # after it keeps the jump instead of deriving it again
+        sleep_ms = self._sleep_ms(tick, now_ms, n, metrics)
+        clock = now_ms if sleep_ms is None else sleep_ms
+        self.m = tick_append_log(self.spark, self.table, updates, now_ms=clock, marker=self.m)
         _release(caches)
         if tick % self.every == 0:
-            # after the release: the compaction swap evicts every cached
-            # frame of the table, and this tick reads none of them again
-            compact_state_log(self.spark, self.table, buckets=self.buckets)
+            # after the release: the new base evicts every cached frame of
+            # the table, and this tick reads none of them again
+            self.m = compact_state_log(self.spark, self.table, marker=self.m)
         if self.cfg.collect_stats and n > 0:
             self._pending = {"tick": tick, "frontier": n}
-        return Tick(read_state_log(self.spark, self.table), n, _due_ms(metrics), stats, False)
+        state = read_state_log(self.spark, self.table, marker=self.m)
+        return Tick(state, n, sleep_ms, stats, False)
 
     def close(self, state: DataFrame) -> list[dict]:
         if self._pending is None:
@@ -425,3 +306,15 @@ class _LogBackend(_TableBackend):
         # at crawl end, not per tick
         row = state.agg(*self.aggs).collect()[0].asDict()
         return [{**self._pending, "status_counts": _obs_counts(row)}]
+
+    def ingest(self, obs: DataFrame, *, now_ms: int, marker: Marker | None) -> Marker:
+        """Stage merged seed observations as the seeds pending for the
+        next tick of the log ``marker`` names, or start a log at tick 0
+        with clock ``now_ms`` when it is None. Returns the marker, whose
+        tick seed ingestion does not advance."""
+        seeds = merge_crawl_state(obs)
+        if marker is None:
+            self.m = save_bucketed_state(seeds, self.table, buckets=self.buckets, now_ms=now_ms)
+        else:
+            self.m = stage_pending_seeds(self.spark, self.table, seeds, marker=marker)
+        return self.m

@@ -76,6 +76,16 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
+    # --- durable-log rotation: stupid_backoff_score's joins lost their
+    # forced broadcast hints (the planner sizes c2/c1/nd from their
+    # checkpoints); the crawl loop's durable state is one bucketed state
+    # log with a commit marker, bucketed_state_merge writes and commits a
+    # new base through it, and crawl_reachability / _rcte run the loop.
+    # Value-oracled at sf0.001 + sf0.01.
+    "stupid_backoff_score",       # planner-sized broadcasts
+    "bucketed_state_merge",       # tick_merge_bucketed: base + commit
+    "crawl_reachability",         # the crawl loop
+    "crawl_reachability_rcte",    # the crawl loop's recursive-CTE twin
     # --- codegen rotation: the language detector's script label is built
     # from count columns and its routing class rides in the trigram join
     # key, so every stage compiles under whole-stage codegen (it fell back
@@ -95,22 +105,11 @@ PRIORITY_WINDOW = [
     "ann_topk_ivf",               # _ivf_exact_centroids_cached, no xn
     "ann_recall_report",          # _ivf_exact_centroids_cached, its xn
     "facility_location_select",   # parquet_row_count-gated driver fold
-    # --- state-backend rotation: the crawl loop's state modes moved
-    # behind one backend (plans/state_backend.py) — crawl_reachability
-    # runs the loop, bucketed_state_merge the table swap it calls — and
-    # connected_components now drops edges with a NULL or non-node
-    # endpoint before its driver fold (curation_funnel and
-    # near_dup_keep_best consume the clusters). Value-oracled at sf0.001
-    # + sf0.01.
-    "crawl_reachability",         # loop through the state backend
-    "bucketed_state_merge",       # table backend's rewrite swap
-    "curation_funnel",            # CC fold: node-only edge list
-    # --- ntot rotation: stupid_backoff_score's corpus token total is a
-    # one-row grouping-free aggregate attached by broadcast cross join
-    # again, not a partition-less window over the per-doc table (which
-    # planned as Exchange SinglePartition -> Window). Value-oracled at
+    # --- state-backend rotation: connected_components drops edges with
+    # a NULL or non-node endpoint before its driver fold (curation_funnel
+    # and near_dup_keep_best consume the clusters). Value-oracled at
     # sf0.001 + sf0.01.
-    "stupid_backoff_score",       # ntot: one-row aggregate, broadcast
+    "curation_funnel",            # CC fold: node-only edge list
     # --- state-log rotation: the queries on a value path the plain-file
     # state log changed — merge_updates_join as one SQL projection
     # (bucketed_state_merge), the merge lattice's status priority as a
@@ -147,8 +146,9 @@ PRIORITY_WINDOW = [
     # unpivot_priority_metrics / weekday_revenue_profile are the four
     # r6 rows left for a future rotation, all bench-green every round;
     # the memo rotation took the slots of the last five,
-    # quartiles_one_pass .. softdedup_loss_weights, and the codegen
-    # rotation the slot of price_range_density).
+    # quartiles_one_pass .. softdedup_loss_weights, the codegen rotation
+    # the slot of price_range_density, and the durable-log rotation the
+    # slot of price_histogram_buckets).
     "pagerank_5iter",
     "quantity_bag_ops",
     "scd2_versioned_revenue",
@@ -176,7 +176,6 @@ PRIORITY_WINDOW = [
     "order_rank_distributions",
     "pivot_priority_by_year",
     "poisson_bootstrap_ci",
-    "price_histogram_buckets",
 ]
 
 

@@ -530,14 +530,14 @@ FROM merged
 )
 def bucketed_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB URL-DB shape, driver-gated: half the observations are
-    folded into a bucketed+sorted catalog table (the durable state), the
-    other half arrive as a tick delta merged in via
+    folded into the bucketed+sorted base of a state log (the durable
+    state), the other half arrive as a tick delta merged in via
     tick_merge_bucketed (bucket-local join — the state side never
     shuffles, operators/state_table.py). Because the merge lattice is
     associative, the split-fold-merge result must equal the one-shot
     fold over ALL observations — which is exactly the oracle
     (crawl_merge_lattice's). Value-checks merge_updates_join, the
-    bucketed layout, and the crash-safe table swap end-to-end."""
+    bucketed layout, and a new base's commit end-to-end."""
     import uuid
 
     from ..operators.state_table import save_bucketed_state, tick_merge_bucketed
@@ -553,7 +553,7 @@ def bucketed_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state0 = merge_crawl_state(obs.filter(half))
     tbl = "crawl_state_q_" + uuid.uuid4().hex[:8]
     save_bucketed_state(state0, tbl, buckets=8)
-    new_state = tick_merge_bucketed(spark, tbl, obs.filter(~half), buckets=8)
+    new_state = tick_merge_bucketed(spark, tbl, obs.filter(~half))
     return new_state.select(
         "url", "pld", "status", "status_time", F.round("score", 6).alias("score"), "next_fetch_time"
     )

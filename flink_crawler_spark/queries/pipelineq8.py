@@ -511,7 +511,11 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-row ntot broadcast inside nd's build); 6 global-agg exchanges ->
     # 3 window exchanges that replace them 1:1 in the build jobs, plus
     # ntot's merge of per-partition partial sums. Checkpoints stay: each
-    # combined table is the build output the probe job broadcasts.
+    # combined table is a sized build side. The joins carry no broadcast
+    # hint — c2, c1 and nd grow with the corpus — so the planner
+    # broadcasts them only while their checkpointed size fits the
+    # threshold and shuffles them past it; only the one-row ntot is
+    # forced.
     _w3 = Window.partitionBy("a", "b", "w")
     c3dw = (
         tr.groupBy("doc_id", "a", "b", "w")
@@ -544,7 +548,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     j1 = (
         c3dw.alias("t3")
         .join(
-            F.broadcast(c2.alias("cA")),
+            c2.alias("cA"),
             F.expr("t3.doc_id = cA.doc_id AND t3.a = cA.x AND t3.b = cA.y"),
         )
         .select(
@@ -555,7 +559,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     j2 = (
         j1.alias("j1")
         .join(
-            F.broadcast(c2.alias("cB")),
+            c2.alias("cB"),
             F.expr("j1.doc_id = cB.doc_id AND j1.b = cB.x AND j1.w = cB.y"),
         )
         .select(
@@ -566,7 +570,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     j3 = (
         j2.alias("j2")
         .join(
-            F.broadcast(c1.alias("uA")),
+            c1.alias("uA"),
             F.expr("j2.doc_id = uA.doc_id AND j2.b = uA.w"),
         )
         .select(
@@ -577,7 +581,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     j4 = (
         j3.alias("j3")
         .join(
-            F.broadcast(c1.alias("uB")),
+            c1.alias("uB"),
             F.expr("j3.doc_id = uB.doc_id AND j3.w = uB.w"),
         )
         .select(
@@ -586,7 +590,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pos = (
-        j4.join(F.broadcast(nd), "doc_id")
+        j4.join(nd, "doc_id")
         .select(
             "doc_id",
             F.col("c3d").alias("cnt"),

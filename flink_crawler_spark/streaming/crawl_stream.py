@@ -12,35 +12,22 @@ Exactly-once seed ingestion comes from the file source's offset log
 (Spark's checkpoint prevents re-delivery), which is the reference's
 checkpointed read index (SeedUrlSource.java:153-166) reborn as stream
 offsets. A batch replayed before its first tick committed replaces its
-own pending seeds (table mode); a later replay re-merges the same rows,
-which is idempotent for already-fetched URLs.
+own pending seeds; a later replay re-merges the same rows, which is
+idempotent for already-fetched URLs.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.state_table import Marker
 from ..plans.crawl_loop import CrawlConfig, clean_urls, crawl, seeds_to_state
 from ..plans.state_backend import state_backend
 from ..sources.seeds import seed_stream
 
-
-def ingest_seeds(
-    spark: SparkSession,
-    seeds: DataFrame,
-    state_dir: str,
-    *,
-    now_ms: int,
-    single_domain: str | None = None,
-) -> None:
-    """Merge a batch of (new) seed rows into the latest ``state_dir``
-    snapshot (``state_t0`` when there is none), keeping its marker's
-    tick and persisted clock."""
-    obs = seeds_to_state(clean_urls(seeds, single_domain=single_domain), now_ms=now_ms)
-    state_backend(spark, CrawlConfig(state_dir=state_dir)).ingest(obs, now_ms=now_ms)
+_UNREAD = object()  # ingest_seeds_table's caller has not read the marker
 
 
 def ingest_seeds_table(
@@ -51,18 +38,21 @@ def ingest_seeds_table(
     now_ms: int,
     buckets: int = 64,
     single_domain: str | None = None,
-) -> int:
-    """Ingest a batch of (new) seed rows into the BUCKETED state table —
+    marker=_UNREAD,
+) -> Marker:
+    """Ingest a batch of (new) seed rows into the durable state log —
     the 100 TB deployment shape (streaming seed source + durable
     bucketed URL DB). The batch's merged observations are written as the
     seeds pending for the next tick (a delta-sized write, replaced on
     replay; operators/state_table.py): the live state view folds them
-    in, and the next committed tick absorbs them, in log and rewrite
-    mode alike. Returns the table's completed-tick counter, which seed
+    in, and the next committed tick absorbs them. ``state_table`` is the
+    log's table name (``state_dir_table`` names a ``state_dir``),
+    ``marker`` its commit marker (None: there is no log yet) when the
+    caller has just read it. Returns the marker, whose tick seed
     ingestion does not advance."""
     obs = seeds_to_state(clean_urls(seeds, single_domain=single_domain), now_ms=now_ms)
-    cfg = CrawlConfig(state_table=state_table, state_buckets=buckets)
-    return state_backend(spark, cfg).ingest(obs, now_ms=now_ms)
+    backend = state_backend(spark, CrawlConfig(state_table=state_table, state_buckets=buckets))
+    return backend.ingest(obs, now_ms=now_ms, marker=backend.marker() if marker is _UNREAD else marker)
 
 
 def continuous_crawl(
@@ -91,12 +81,12 @@ def continuous_crawl(
     lines the seed file gained since; a checkpoint written by the old
     Python seed source is refused (delete it to start over).
 
-    State backend: exactly one of ``state_dir`` (per-tick parquet
-    snapshots) or ``state_table`` (the BUCKETED catalog table — the
-    100 TB deployment: per-tick merge is a bucket-local join, the table
-    is the checkpoint). Either is set on the batch crawl's
-    ``CrawlConfig``, so the stream and the batch engine share one state
-    backend and one durable URL DB format.
+    State: exactly one of ``state_dir`` (the state log's root
+    directory) or ``state_table`` (its catalog name, rooted in the
+    warehouse) — the one durable URL DB format, bucketed for the 100 TB
+    deployment (per-tick merge is a bucket-local join). Either is set on
+    the batch crawl's ``CrawlConfig``, so the stream and the batch engine
+    share one state backend.
     """
     if (state_dir is None) == (state_table is None):
         raise ValueError("exactly one of state_dir= / state_table= must be given")
@@ -108,20 +98,23 @@ def continuous_crawl(
         trace=False,
     )
     backend = state_backend(spark, cfg)
-    # the backend's public ingest, called by its module-level name
-    ingest = ingest_seeds if state_table is None else partial(ingest_seeds_table, buckets=state_buckets)
     empty_seeds = spark.createDataFrame([], "url string, score double")
     stream = seed_stream(spark, seed_path, checkpoint_dir, seeds_per_batch)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # stamp the seeds with the persisted clock: refetch sleep jumps
-        # moved it past tick*tick_ms, and seeds stamped with a rewound
-        # clock would sort as already-due history
-        tick, clock = backend.marker() or (0, None)
+        # the batch's one marker read, handed to the ingest and to the
+        # crawl's resume. Seeds are stamped with the persisted clock:
+        # refetch sleep jumps moved it past tick*tick_ms, and seeds
+        # stamped with a rewound clock would sort as already-due history
+        m = backend.marker()
+        tick, clock = (m.tick, m.clock) if m else (0, None)
         now_ms = clock if clock is not None else start_ms + tick * cfg.tick_ms
-        ingest(spark, batch_df, state_dir or state_table, now_ms=now_ms, single_domain=cfg.single_domain)
+        m = ingest_seeds_table(
+            spark, batch_df, backend.table, now_ms=now_ms, buckets=state_buckets,
+            single_domain=cfg.single_domain, marker=m,
+        )
         batch_cfg = replace(cfg, max_ticks=tick + ticks_per_batch)
-        crawl(spark, empty_seeds, pages=pages, config=batch_cfg, start_ms=start_ms)
+        crawl(spark, empty_seeds, pages=pages, config=batch_cfg, start_ms=start_ms, marker=m)
 
     writer = stream.writeStream.foreachBatch(on_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -96,19 +96,18 @@ def test_bucketed_state_merge_shuffles_only_the_delta(spark, lattice_frames, tmp
         # pre-partitioned (HashPartitioning(url, n)) and never shuffles.
         assert plan.count("Exchange") == 1
 
-        # durable tick swap keeps the data correct and the table bucketed
-        new_state = tick_merge_bucketed(spark, "crawl_state_test", updates, buckets=n_buckets)
+        # a merge tick's new base keeps the data correct and the table bucketed
+        new_state = tick_merge_bucketed(spark, "crawl_state_test", updates)
         got = {r["url"]: r.asDict() for r in new_state.filter(~F.col("url").startswith("http://x/")).collect()}
         want = {r["url"]: r.asDict() for r in merge_updates(state, updates).collect()}
         assert got == want
         plan2 = (
             new_state.groupBy("url").agg(F.sum("score"))._jdf.queryExecution().executedPlan().toString()
         )
-        assert plan2.count("Exchange") == 0  # still bucketed after the swap
+        assert plan2.count("Exchange") == 0  # still bucketed on the new base
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS crawl_state_test")
-        spark.sql("DROP TABLE IF EXISTS crawl_state_test__staging")
+        _drop(spark, "crawl_state_test")
 
 
 def test_crawl_loop_through_bucketed_state_table(spark, tmp_path):
@@ -116,8 +115,8 @@ def test_crawl_loop_through_bucketed_state_table(spark, tmp_path):
     the same fixture graph crawled through the default (union re-agg +
     localCheckpoint) path and the bucketed-table path converges to the
     IDENTICAL final state, the table stays bucketed (Exchange-free
-    groupBy on the key) after every swap, and a restarted crawl resumes
-    from the table instead of the seeds."""
+    groupBy on the key) after every new base, and a restarted crawl
+    resumes from the table instead of the seeds."""
     from flink_crawler_spark.plans.crawl_loop import CrawlConfig, crawl
     from flink_crawler_spark.sources.fixtures import (
         render_pages,
@@ -161,8 +160,8 @@ def test_crawl_loop_through_bucketed_state_table(spark, tmp_path):
             .toString()
         )
         assert plan.count("Exchange") == 0
-        # trace survives the table swaps (compaction checkpoints it per
-        # tick) and matches the default path's per-operator URL sets
+        # trace survives the new bases (history compaction checkpoints it
+        # per tick) and matches the default path's per-operator URL sets
         for op in ("frontier", "fetched", "outlink"):
             sa = {r["url"] for r in base.trace.filter(F.col("operator") == op).collect()}
             sb = {
@@ -172,9 +171,9 @@ def test_crawl_loop_through_bucketed_state_table(spark, tmp_path):
 
         # the simulated clock is persisted with the tick (refetch-mode
         # sleep jumps would otherwise rewind on resume)
-        from flink_crawler_spark.operators.state_table import get_state_now_ms
+        from flink_crawler_spark.operators.state_table import get_state_marker
 
-        assert get_state_now_ms(spark, table) == 1_700_000_000_000 + bucketed.ticks * 100_000
+        assert get_state_marker(spark, table).clock == 1_700_000_000_000 + bucketed.ticks * 100_000
 
         # restart: the table IS the checkpoint — a fresh crawl() call
         # resumes from it (no re-seeding) and stays at the fixpoint
@@ -190,71 +189,12 @@ def test_crawl_loop_through_bucketed_state_table(spark, tmp_path):
         assert c == a
         assert resumed.ticks >= bucketed.ticks  # resumed at the stored tick
     finally:
-        for t in (table, f"{table}__staging", f"{table}__old"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_bucketed_state_crash_recovery_from_old(spark, lattice_frames):
-    """tick_merge_bucketed's swap is crash-safe: if a crash lands in the
-    window where the live table has been renamed aside but the staging
-    table has not yet taken the name, load_bucketed_state restores from
-    <table>__old and the crawl resumes from the previous tick's state."""
-    from flink_crawler_spark.operators.state_table import (
-        load_bucketed_state,
-        save_bucketed_state,
-    )
-
-    state, _updates = lattice_frames
-    table = "crawl_state_crash_test"
-    try:
-        save_bucketed_state(state, table, buckets=4)
-        want = {r["url"]: r.asDict() for r in spark.table(table).collect()}
-        # simulate the crash window: live name renamed aside, no staging
-        spark.sql(f"ALTER TABLE {table} RENAME TO {table}__old")
-        assert not spark.catalog.tableExists(table)
-        restored = load_bucketed_state(spark, table)
-        got = {r["url"]: r.asDict() for r in restored.collect()}
-        assert got == want
-        assert spark.catalog.tableExists(table)  # name restored
-        assert not spark.catalog.tableExists(f"{table}__old")
-    finally:
-        for t_ in (table, f"{table}__old", f"{table}__staging"):
-            spark.sql(f"DROP TABLE IF EXISTS {t_}")
-
-
-def test_tick_property_rides_the_swap_atomically(spark, lattice_frames):
-    """The crawl.tick counter is stamped on the STAGING table before the
-    rename, so the tick and the data replace the live table together —
-    no crash window can pair new state with a stale (or missing, i.e.
-    tick-0) counter."""
-    from flink_crawler_spark.operators.state_table import (
-        get_state_tick,
-        save_bucketed_state,
-        set_state_tick,
-        tick_merge_bucketed,
-    )
-
-    state, updates = lattice_frames
-    table = "crawl_state_tickprop_test"
-    try:
-        save_bucketed_state(state, table, buckets=4)
-        set_state_tick(spark, table, 3)
-        tick_merge_bucketed(spark, table, updates, buckets=4, tick=4)
-        assert get_state_tick(spark, table) == 4
-        # a merge WITHOUT a tick resets the counter to 0 (saveAsTable
-        # creates the staging table propertyless, and nothing re-stamps
-        # it) — the documented contract callers like ingest_seeds_table
-        # must compensate for by always passing tick=
-        tick_merge_bucketed(spark, table, updates, buckets=4)
-        assert get_state_tick(spark, table) == 0
-    finally:
-        for t_ in (table, f"{table}__old", f"{table}__staging"):
-            spark.sql(f"DROP TABLE IF EXISTS {t_}")
+        _drop(spark, table)
 
 
 def test_crawl_loop_with_state_log_mode(spark, tmp_path):
-    """LSM log mode: per-tick writes are delta tables (the base is only
-    rewritten at compaction), the state view converges to the identical
+    """LSM log mode: per-tick writes are delta directories (a base is only
+    written at compaction), the state view converges to the identical
     final state as the default loop, and a restarted crawl resumes from
     base+deltas."""
     import os
@@ -299,14 +239,14 @@ def test_crawl_loop_with_state_log_mode(spark, tmp_path):
         assert got == want
         assert got["http://l1.com/c"]["status"] == "FETCHED"
 
-        # the base table's data files were written at seed time or the
-        # last compaction — NOT once per tick (the whole point): between
-        # compactions only t<N> delta directories appear in the table's
-        # log directory, next to its location
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        log_dir = os.path.join(warehouse, f"{table}__log")
+        # the base's data files were written at seed time or the last
+        # compaction — NOT once per tick (the whole point): between
+        # compactions only t<N> delta directories appear in the root,
+        # next to the one live base
+        entries = os.listdir(_log_dir(spark, table))
+        assert [d for d in entries if d.startswith("base_t")] == [f"base_t{(res.ticks // 3) * 3}"]
         # ticks since the last compaction live as delta directories
-        deltas = [d for d in os.listdir(log_dir) if re.fullmatch(r"t\d+", d)]
+        deltas = [d for d in entries if re.fullmatch(r"t\d+", d)]
         last_compaction = (res.ticks // 3) * 3
         assert len(deltas) == res.ticks - last_compaction, (deltas, res.ticks)
 
@@ -322,9 +262,7 @@ def test_crawl_loop_with_state_log_mode(spark, tmp_path):
         assert got2 == want
         assert resumed.ticks >= res.ticks
     finally:
-        for t_ in list(spark.catalog.listTables()):
-            if t_.name.startswith(table):
-                spark.sql(f"DROP TABLE IF EXISTS {t_.name}")
+        _drop(spark, table)
 
 
 def test_state_log_time_travel(spark, tmp_path):
@@ -390,7 +328,7 @@ def test_state_log_time_travel(spark, tmp_path):
         final = {
             r["url"]: r.asDict() for r in read_state_log(spark, table).collect()
         }
-        compact_state_log(spark, table, buckets=n_buckets)
+        compact_state_log(spark, table)
         after = {
             r["url"]: r.asDict()
             for r in read_state_log(spark, table, at_tick=res.ticks).collect()
@@ -399,41 +337,41 @@ def test_state_log_time_travel(spark, tmp_path):
         with pytest.raises(ValueError):
             read_state_log(spark, table, at_tick=1)
     finally:
-        for t_ in list(spark.catalog.listTables()):
-            if t_.name.startswith(table):
-                spark.sql(f"DROP TABLE IF EXISTS {t_.name}")
+        _drop(spark, table)
 
 
 # ---------------------------------------------------------------------------
-# The log layout: plain parquet delta and pending-seed directories next to
-# the table, the marker rule, the pending-seed rule, the sweeps
+# The log layout: bases, deltas and pending seeds under one root, the
+# commit-marker rule, the pending-seed rule, the sweeps
 # ---------------------------------------------------------------------------
 
 
 def _log_dir(spark, table):
+    """The state root of ``table``: <warehouse>/<table>."""
     import os
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    return os.path.join(warehouse, f"{table}__log")
+    return os.path.join(warehouse, table)
 
 
 def _fresh(spark, table, rows, *, tick=0):
-    from flink_crawler_spark.operators.state_table import (
-        save_bucketed_state,
-        set_state_tick,
-    )
+    from flink_crawler_spark.operators.state_table import save_bucketed_state
 
     _drop(spark, table)
-    save_bucketed_state(obs(spark, rows), table, buckets=4)
-    set_state_tick(spark, table, tick, now_ms=1_000)
+    save_bucketed_state(obs(spark, rows), table, buckets=4, tick=tick, now_ms=1_000)
 
 
 def _drop(spark, table):
     import shutil
 
-    for t_ in (table, f"{table}__old", f"{table}__staging"):
-        spark.sql(f"DROP TABLE IF EXISTS {t_}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(_log_dir(spark, table), ignore_errors=True)
+
+
+def _marker(spark, table):
+    from flink_crawler_spark.operators.state_table import get_state_marker
+
+    return get_state_marker(spark, table)
 
 
 def _view(spark, table, **kw):
@@ -464,11 +402,11 @@ SEED_ROWS = [("s", "s.com", "UNFETCHED", 200, 2.0, 200), ("n", "n.com", "UNFETCH
 
 
 def test_orphan_delta_past_the_marker_is_ignored_and_replaced(spark, monkeypatch):
-    """A crash between a delta's write and the marker flip leaves an
-    orphan t<N>: reads ignore it, and re-running tick N overwrites it."""
+    """A crash between a delta's write and its commit leaves an orphan
+    t<N>: reads ignore it, and re-running tick N overwrites it."""
     import os
 
-    from flink_crawler_spark.operators.state_table import get_state_tick, tick_append_log
+    from flink_crawler_spark.operators.state_table import tick_append_log
 
     table = "log_orphan_test"
     _fresh(spark, table, BASE_ROWS)
@@ -476,28 +414,31 @@ def test_orphan_delta_past_the_marker_is_ignored_and_replaced(spark, monkeypatch
         before = _view(spark, table)
         crashed = obs(spark, [("x", "x.com", "FETCHED", 300, 1.0, 999)])
         with monkeypatch.context() as m:
-            _crash_on(m, "set_state_tick")
+            _crash_on(m, "_commit")
             with pytest.raises(_Crash):
-                tick_append_log(spark, table, crashed, buckets=4, tick=1)
+                tick_append_log(spark, table, crashed)
         assert os.path.isdir(os.path.join(_log_dir(spark, table), "t1"))  # the orphan
-        assert get_state_tick(spark, table) == 0
+        assert _marker(spark, table).tick == 0
         assert _view(spark, table) == before  # ignored
 
         rerun = obs(spark, [("y", "y.com", "FETCHED", 300, 1.0, 999)])
-        tick_append_log(spark, table, rerun, buckets=4, tick=1)
+        tick_append_log(spark, table, rerun)
         after = _view(spark, table)
         assert "y" in after and "x" not in after  # replaced, not appended
-        assert get_state_tick(spark, table) == 1
+        assert _marker(spark, table).tick == 1
     finally:
         _drop(spark, table)
 
 
 def test_recreated_table_never_reads_a_dropped_namesakes_log(spark):
-    """Deltas and pending seeds outlive DROP TABLE (they sit next to the
-    table, not inside it); a table re-created under the same name must
-    start with an empty log, even when its marker covers the old ticks."""
+    """DROP TABLE drops only the catalog entry, a cache of the commit
+    marker: the next read re-registers it and sees the same state. A
+    table re-created by save_bucketed_state starts from an empty root, so
+    it never reads the deltas and pending seeds its namesake left."""
+    import os
+
     from flink_crawler_spark.operators.state_table import (
-        set_state_tick,
+        save_bucketed_state,
         stage_pending_seeds,
         tick_append_log,
     )
@@ -505,16 +446,104 @@ def test_recreated_table_never_reads_a_dropped_namesakes_log(spark):
     table = "log_recreate_test"
     _fresh(spark, table, BASE_ROWS)
     try:
-        tick_append_log(spark, table, obs(spark, [("old", "o.com", "FETCHED", 300, 1.0, 9)]), buckets=4, tick=1)
+        tick_append_log(spark, table, obs(spark, [("old", "o.com", "FETCHED", 300, 1.0, 9)]))
         stage_pending_seeds(spark, table, obs(spark, [("oldseed", "o.com", "UNFETCHED", 300, 1.0, 9)]))
-        assert {"old", "oldseed"} <= set(_view(spark, table))
-        spark.sql(f"DROP TABLE {table}")  # the log directory stays behind
-
-        from flink_crawler_spark.operators.state_table import save_bucketed_state
+        before = _view(spark, table)
+        assert {"old", "oldseed"} <= set(before)
+        spark.sql(f"DROP TABLE {table}")  # the root stays behind
+        assert _view(spark, table) == before  # re-registered from the marker
+        assert spark.catalog.tableExists(table)
 
         save_bucketed_state(obs(spark, BASE_ROWS), table, buckets=4)
-        set_state_tick(spark, table, 1)  # t1 and seeds_t2 would both be in range
         assert set(_view(spark, table)) == {"s", "f"}
+        assert sorted(d for d in os.listdir(_log_dir(spark, table)) if not d.startswith(".")) == [
+            "base_t0", "commit_0"
+        ]
+        tick_append_log(spark, table, obs(spark, []))  # t1 and seeds_t2 in range again
+        assert set(_view(spark, table)) == {"s", "f"}
+    finally:
+        _drop(spark, table)
+
+
+def _write_steps(spark, table):
+    """Each commit-making write of the log: name -> a call that runs it
+    on the committed state (a delta tick, a merge tick, a compaction)."""
+    from flink_crawler_spark.operators.state_table import (
+        compact_state_log,
+        tick_append_log,
+        tick_merge_bucketed,
+    )
+
+    def append():
+        tick_append_log(spark, table, obs(spark, [("x", "x.com", "FETCHED", 300, 1.0, 9)]))
+
+    def merge():
+        tick_merge_bucketed(spark, table, obs(spark, [("y", "y.com", "FETCHED", 300, 1.0, 9)]), now_ms=2_000)
+
+    return {"append": append, "merge": merge, "compact": lambda: compact_state_log(spark, table)}
+
+
+def test_crash_before_commit_resumes_the_committed_state(spark, monkeypatch):
+    """A crash after a delta or base write but before its commit leaves
+    the committed state in force — also for a catalog entry the base
+    write already re-pointed, and for a new process (its catalog is
+    empty) — and a re-run of the write commits normally."""
+    table = "crash_before_commit_test"
+    _fresh(spark, table, BASE_ROWS)
+    try:
+        steps = _write_steps(spark, table)
+        for name in ("append", "merge", "compact"):
+            if name == "compact":
+                steps["append"]()  # something to compact
+            committed, before = _marker(spark, table), _view(spark, table)
+            with monkeypatch.context() as m:
+                _crash_on(m, "_commit")
+                with pytest.raises(_Crash):
+                    steps[name]()
+            assert _marker(spark, table) == committed, name
+            assert _view(spark, table) == before, name
+            spark.sql(f"DROP TABLE {table}")  # what a new process starts with
+            assert _view(spark, table) == before, name
+            steps[name]()
+            after = _marker(spark, table)
+            assert after.seq == committed.seq + 1, name
+        assert set(_view(spark, table)) == {"s", "f", "x", "y"}
+    finally:
+        _drop(spark, table)
+
+
+def test_crash_after_commit_before_sweep_resumes_the_new_state(spark, monkeypatch):
+    """A crash between a new base's commit and its sweep leaves the new
+    state in force, with entries the marker no longer names; the next
+    new base sweeps them."""
+    import os
+
+    table = "crash_before_sweep_test"
+    _fresh(spark, table, BASE_ROWS)
+    try:
+        steps = _write_steps(spark, table)
+        steps["append"]()
+        for name in ("merge", "compact"):
+            with monkeypatch.context() as m:
+                _crash_on(m, "_sweep")
+                with pytest.raises(_Crash):
+                    steps[name]()
+            after = _marker(spark, table)
+            assert after.base == after.tick, name
+            assert os.path.isdir(os.path.join(_log_dir(spark, table), f"base_t{after.base}"))
+            spark.sql(f"DROP TABLE {table}")
+            assert set(_view(spark, table)) >= {"s", "f", "x"}, name
+            if name == "merge":
+                assert "y" in _view(spark, table)
+                steps["append"]()  # a delta for the compaction below
+        entries = sorted(d for d in os.listdir(_log_dir(spark, table)) if not d.startswith("."))
+        assert len([d for d in entries if d.startswith("base_t")]) > 1  # not swept yet
+        steps["append"]()
+        steps["compact"]()
+        m = _marker(spark, table)
+        entries = sorted(d for d in os.listdir(_log_dir(spark, table)) if not d.startswith("."))
+        assert entries == [f"base_t{m.base}", f"commit_{m.seq}"]
+        assert set(_view(spark, table)) == {"s", "f", "x", "y"}
     finally:
         _drop(spark, table)
 
@@ -523,13 +552,12 @@ def test_recreated_table_never_reads_a_dropped_namesakes_log(spark):
 def test_pending_seeds_are_absorbed_exactly_once(spark, monkeypatch, mode):
     """A staged seed batch shows in the live view, not in the committed
     view; the next committed tick absorbs it once — through a crash
-    between the delta write and the marker flip (log mode) or between
-    the swap and the sweep (rewrite mode), and through a compaction that
-    runs while seeds are pending. UNFETCHED scores SUM in the lattice,
-    so a second absorption shows as a grown score."""
+    between the delta write and its commit (log mode) or between a merge
+    tick's commit and its sweep (rewrite mode), and through a compaction
+    that runs while seeds are pending. UNFETCHED scores SUM in the
+    lattice, so a second absorption shows as a grown score."""
     from flink_crawler_spark.operators.state_table import (
         compact_state_log,
-        get_state_tick,
         stage_pending_seeds,
         tick_append_log,
         tick_merge_bucketed,
@@ -538,43 +566,44 @@ def test_pending_seeds_are_absorbed_exactly_once(spark, monkeypatch, mode):
     table = f"log_seeds_{mode}_test"
     _fresh(spark, table, BASE_ROWS)
 
-    def commit(tick, rows):
+    def commit(rows):
+        """Commit the next tick."""
         upd = obs(spark, rows)
         if mode == "log":
-            tick_append_log(spark, table, upd, buckets=4, tick=tick, now_ms=1_000)
+            tick_append_log(spark, table, upd, now_ms=1_000)
         else:
-            tick_merge_bucketed(spark, table, upd, buckets=4, tick=tick, now_ms=1_000)
+            tick_merge_bucketed(spark, table, upd, now_ms=1_000)
 
     try:
-        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS)) == 0
+        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS)).tick == 0
         live, committed = _view(spark, table), _view(spark, table, at_tick=0)
         assert live["s"]["score"] == 3.0 and live["n"]["score"] == 0.5
         assert committed["s"]["score"] == 1.0 and "n" not in committed
 
         tick1 = [("f", "f.com", "FETCHED", 300, 1.0, 900)]
         with monkeypatch.context() as m:
-            _crash_on(m, "set_state_tick" if mode == "log" else "_sweep")
+            _crash_on(m, "_commit" if mode == "log" else "_sweep")
             with pytest.raises(_Crash):
-                commit(1, tick1)
+                commit(tick1)
         # log mode: the orphan t1 is ignored, the seeds still pending;
-        # rewrite mode: the swap committed tick 1, and the seeds it folded
-        # sit at or below the marker, so they are ignored until swept
-        assert get_state_tick(spark, table) == (0 if mode == "log" else 1)
+        # rewrite mode: the merge committed tick 1, and the seeds it folded
+        # are no longer named by the marker, so they are ignored until swept
+        assert _marker(spark, table).tick == (0 if mode == "log" else 1)
         assert _view(spark, table)["s"]["score"] == 3.0
         if mode == "log":
-            commit(1, tick1)
-        assert get_state_tick(spark, table) == 1
+            commit(tick1)
+        assert _marker(spark, table).tick == 1
         v1 = _view(spark, table)
         assert v1["s"]["score"] == 3.0 and v1["n"]["score"] == 0.5
         assert _view(spark, table, at_tick=1) == v1  # absorbed: committed now
 
         # a second batch pending across a compaction stays pending
-        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS[:1])) == 1
-        compact_state_log(spark, table, buckets=4)
+        assert stage_pending_seeds(spark, table, obs(spark, SEED_ROWS[:1])).tick == 1
+        compact_state_log(spark, table)
         assert _view(spark, table, at_tick=1)["s"]["score"] == 3.0
         assert _view(spark, table)["s"]["score"] == 5.0
-        commit(2, [("f", "f.com", "FETCHED", 400, 1.0, 900)])
-        compact_state_log(spark, table, buckets=4)
+        commit([("f", "f.com", "FETCHED", 400, 1.0, 900)])
+        compact_state_log(spark, table)
         v2 = _view(spark, table)
         assert v2["s"]["score"] == 5.0 and v2["n"]["score"] == 0.5
         assert v2 == _view(spark, table, at_tick=2)

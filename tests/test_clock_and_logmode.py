@@ -2,8 +2,7 @@
 swap path, the combined refetch+LSM-log+restart mode, and the log-mode
 single-state-scan guarantee.
 
-The simulated clock (crawl.now_ms / the _LATEST marker's second token)
-exists because refetch-mode crawls SLEEP-JUMP it forward to the next
+The simulated clock (the commit marker's ``clock``) exists because refetch-mode crawls SLEEP-JUMP it forward to the next
 due timer (Flink per-key timer semantics). Any path that rewrites the
 state without carrying the clock silently rewinds a resumed crawl to
 start_ms + tick*tick_ms, re-burning ticks to re-derive jumps already
@@ -56,15 +55,11 @@ REFETCH_CFG = dict(refetch=True, refetch_interval_ms=5_000_000, tick_ms=100_000)
 
 
 def test_compact_state_log_preserves_clock(spark, leaf_graph):
-    """compact_state_log's staged swap must carry crawl.now_ms: a
+    """compact_state_log's new base must carry the committed clock: a
     refetch crawl stopping ON a compaction boundary (tick %
     state_log_every == 0, including the final tick) would otherwise
     resume with a rewound clock."""
-    from flink_crawler_spark.operators.state_table import (
-        compact_state_log,
-        get_state_now_ms,
-        get_state_tick,
-    )
+    from flink_crawler_spark.operators.state_table import compact_state_log, get_state_marker
 
     table = "clk_compact_test"
     _drop_state_tables(spark, table)
@@ -79,24 +74,24 @@ def test_compact_state_log_preserves_clock(spark, leaf_graph):
                 state_log_every=3, **REFETCH_CFG,
             ),
         )
-        jumped = get_state_now_ms(spark, table)
+        jumped = get_state_marker(spark, table).clock
         assert jumped is not None
         # the sleep jump moved the clock well past tick*tick_ms
         assert jumped > 1_700_000_000_000 + res.ticks * 100_000
-        # an explicit re-compaction (idempotent swap) must not strip it
-        compact_state_log(spark, table, buckets=4)
-        assert get_state_now_ms(spark, table) == jumped
-        assert get_state_tick(spark, table) == res.ticks
+        # an explicit re-compaction (a no-op: the base is current) must
+        # not strip it
+        compact_state_log(spark, table)
+        assert get_state_marker(spark, table)[1:3] == (res.ticks, jumped)
     finally:
         _drop_state_tables(spark, table)
 
 
 def test_ingest_seeds_table_preserves_jumped_clock(spark, leaf_graph):
-    """A streaming seed micro-batch must leave the table's jumped
-    crawl.now_ms in place (an earlier full-table merge stamped tick-only
-    properties, stripping the clock every batch; pending-seed ingestion
-    touches no table property at all)."""
-    from flink_crawler_spark.operators.state_table import get_state_now_ms
+    """A streaming seed micro-batch must leave the log's jumped clock in
+    place (an earlier full-table merge stamped tick-only properties,
+    stripping the clock every batch; pending-seed ingestion commits the
+    marker with its clock unchanged)."""
+    from flink_crawler_spark.operators.state_table import get_state_marker
     from flink_crawler_spark.streaming.crawl_stream import ingest_seeds_table
 
     table = "clk_ingest_table_test"
@@ -108,35 +103,35 @@ def test_ingest_seeds_table_preserves_jumped_clock(spark, leaf_graph):
                 max_ticks=3, state_table=table, state_buckets=4, **REFETCH_CFG,
             ),
         )
-        jumped = get_state_now_ms(spark, table)
+        jumped = get_state_marker(spark, table).clock
         assert jumped is not None and jumped > 1_700_000_000_000 + 3 * 100_000
         new_seeds = spark.createDataFrame([("http://late.com/", 1.0)], ["url", "score"])
         ingest_seeds_table(spark, new_seeds, table, now_ms=1_700_000_000_000, buckets=4)
-        assert get_state_now_ms(spark, table) == jumped
+        assert get_state_marker(spark, table).clock == jumped
     finally:
         _drop_state_tables(spark, table)
 
 
 def test_ingest_seeds_dir_preserves_jumped_clock(spark, leaf_graph, tmp_path):
-    """Dir-mode seed ingest must write the two-token "tick now_ms"
-    marker, PRESERVING a persisted clock (the old single-token write
-    dropped it; a refetch crawl then resumed rewound and re-burned
-    ticks re-deriving its jumps)."""
-    from flink_crawler_spark.plans.state_backend import _latest_marker
-    from flink_crawler_spark.streaming.crawl_stream import ingest_seeds
+    """Seed ingest into a state_dir log must keep the committed tick AND
+    clock (an old single-token marker write dropped the clock; a refetch
+    crawl then resumed rewound and re-burned ticks re-deriving its
+    jumps)."""
+    from flink_crawler_spark.operators.state_table import get_state_marker, state_dir_table
+    from flink_crawler_spark.streaming.crawl_stream import ingest_seeds_table
 
     state_dir = str(tmp_path / "state")
     res = crawl(
         spark, _seeds(spark), pages=leaf_graph,
         config=CrawlConfig(max_ticks=3, state_dir=state_dir, **REFETCH_CFG),
     )
-    tick0, jumped = _latest_marker(state_dir)
+    table = state_dir_table(state_dir)
+    tick0, jumped = get_state_marker(spark, table)[1:3]
     assert jumped is not None and jumped > 1_700_000_000_000 + res.ticks * 100_000
 
     new_seeds = spark.createDataFrame([("http://late.com/", 1.0)], ["url", "score"])
-    ingest_seeds(spark, new_seeds, state_dir, now_ms=1_700_000_000_000)
-    tick1, kept = _latest_marker(state_dir)
-    assert (tick1, kept) == (tick0, jumped)
+    ingest_seeds_table(spark, new_seeds, table, now_ms=1_700_000_000_000)
+    assert get_state_marker(spark, table)[1:3] == (tick0, jumped)
 
     # resume: the crawl continues at the jumped clock — the refetch
     # already taken is not re-derived, and the new seed is fetched

@@ -9,6 +9,21 @@ from flink_crawler_spark.sources.fixtures import render_pages, web_graph_from_ad
 from flink_crawler_spark.streaming.crawl_stream import continuous_crawl
 
 
+def _dir_state(spark, state_dir):
+    """The live state of a ``state_dir`` log."""
+    from flink_crawler_spark.operators.state_table import read_state_log, state_dir_table
+
+    return read_state_log(spark, state_dir_table(state_dir))
+
+
+def _drop(spark, table):
+    import shutil
+
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
+
+
 def test_continuous_crawl_drains_seed_file(spark, tmp_path):
     adjacency = {
         "http://s1.com/": ["http://s1.com/a"],
@@ -37,8 +52,7 @@ def test_continuous_crawl_drains_seed_file(spark, tmp_path):
     finally:
         q.stop()
 
-    tick = int(open(os.path.join(state_dir, "_LATEST")).read().split()[0])
-    state = spark.read.parquet(os.path.join(state_dir, f"state_t{tick}"))
+    state = _dir_state(spark, state_dir)
     st = {r["url"]: r["status"] for r in state.collect()}
     assert st["http://s1.com/"] == "FETCHED"
     assert st["http://s1.com/a"] == "FETCHED"  # outlink discovered + fetched
@@ -67,8 +81,7 @@ def test_restarted_stream_does_not_redeliver_seeds(spark, tmp_path):
         )
         q.awaitTermination(300)
 
-    tick = int(open(os.path.join(state_dir, "_LATEST")).read().split()[0])
-    state = spark.read.parquet(os.path.join(state_dir, f"state_t{tick}"))
+    state = _dir_state(spark, state_dir)
     rows = state.collect()
     assert len(rows) == 1  # no duplicate state rows after restart
     assert rows[0]["status"] == "FETCHED"
@@ -97,8 +110,7 @@ def test_available_now_drains_one_seed_per_batch(spark, tmp_path):
     assert q.awaitTermination(300)
     assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [1, 1, 1]
 
-    tick = int(open(os.path.join(state_dir, "_LATEST")).read().split()[0])
-    state = spark.read.parquet(os.path.join(state_dir, f"state_t{tick}"))
+    state = _dir_state(spark, state_dir)
     st = {r["url"]: r["status"] for r in state.collect()}
     assert st == {u: "FETCHED" for u in adjacency}
 
@@ -210,8 +222,7 @@ def test_streaming_crawl_converges_to_batch_state(spark, tmp_path):
     finally:
         q.stop()
 
-    tick = int(open(os.path.join(state_dir, "_LATEST")).read().split()[0])
-    state = spark.read.parquet(os.path.join(state_dir, f"state_t{tick}"))
+    state = _dir_state(spark, state_dir)
     b = {r["url"]: r.asDict() for r in state.collect()}
     assert a == b
     assert b["http://domain2.com/deep"]["status"] == "FETCHED"
@@ -219,10 +230,10 @@ def test_streaming_crawl_converges_to_batch_state(spark, tmp_path):
 
 def test_streaming_crawl_with_bucketed_state_table(spark, tmp_path):
     """The 100 TB deployment shape end-to-end: streaming seed source +
-    BUCKETED catalog state table. Converges to the same state as the
-    batch loop, the table survives as the durable URL DB, and a second
-    drain of the same stream is a no-op (idempotent seed re-merge)."""
-    from flink_crawler_spark.operators.state_table import load_bucketed_state
+    BUCKETED state table. Converges to the same state as the batch loop,
+    the table survives as the durable URL DB, and a second drain of the
+    same stream is a no-op (idempotent seed re-merge)."""
+    from flink_crawler_spark.operators.state_table import read_state_log
     from flink_crawler_spark.plans.crawl_loop import crawl
 
     adjacency = {
@@ -258,36 +269,34 @@ def test_streaming_crawl_with_bucketed_state_table(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
-        got = {r["url"]: r.asDict() for r in load_bucketed_state(spark, table).collect()}
+        got = {r["url"]: r.asDict() for r in read_state_log(spark, table).collect()}
         assert got == want
         assert got["http://t2.com/"]["status"] == "FETCHED"
     finally:
-        for t_ in (table, f"{table}__old", f"{table}__staging"):
-            spark.sql(f"DROP TABLE IF EXISTS {t_}")
+        _drop(spark, table)
 
 
 def _ingest_by_full_merge(spark, seeds, table, *, now_ms, buckets):
     """Seed ingestion as a full-table merge: fold the batch into the live
-    state through the crash-safe swap, keeping the marker and the clock
-    (the layout's reference semantics for a pending-seed batch)."""
-    from flink_crawler_spark.operators.merge import merge_crawl_state
+    state and start the log again from the result, keeping the committed
+    tick and clock (the layout's reference semantics for a pending-seed
+    batch)."""
+    from flink_crawler_spark.operators.merge import merge_crawl_state, merge_updates
     from flink_crawler_spark.operators.state_table import (
-        get_state_now_ms,
-        get_state_tick,
+        get_state_marker,
+        read_state_log,
         save_bucketed_state,
-        set_state_tick,
-        tick_merge_bucketed,
     )
     from flink_crawler_spark.plans.crawl_loop import clean_urls, seeds_to_state
 
     obs = seeds_to_state(clean_urls(seeds), now_ms=now_ms)
-    if not spark.catalog.tableExists(table):
-        save_bucketed_state(merge_crawl_state(obs), table, buckets=buckets)
-        set_state_tick(spark, table, 0, now_ms=now_ms)
-        return 0
-    tick, stored = get_state_tick(spark, table), get_state_now_ms(spark, table)
-    tick_merge_bucketed(spark, table, obs, buckets=buckets, tick=tick, now_ms=stored)
-    return tick
+    m = get_state_marker(spark, table)
+    if m is None:
+        save_bucketed_state(merge_crawl_state(obs), table, buckets=buckets, now_ms=now_ms)
+        return
+    # materialized: the new log replaces the root the view reads
+    merged = merge_updates(read_state_log(spark, table), obs).localCheckpoint(eager=True)
+    save_bucketed_state(merged, table, buckets=buckets, tick=m.tick, now_ms=m.clock)
 
 
 def test_streamed_log_mode_crawl_equals_ingest_then_crawl(spark, tmp_path):
@@ -315,7 +324,7 @@ def test_streamed_log_mode_crawl_equals_ingest_then_crawl(spark, tmp_path):
     start_ms, ticks = 1_700_000_000_000, 2
     try:
         for t_ in (streamed, merged):
-            spark.sql(f"DROP TABLE IF EXISTS {t_}")
+            _drop(spark, t_)
         seed_file = tmp_path / "seeds.txt"
         seed_file.write_text("\n".join(seeds) + "\n")
         q = continuous_crawl(
@@ -336,12 +345,11 @@ def test_streamed_log_mode_crawl_equals_ingest_then_crawl(spark, tmp_path):
             q.stop()
 
         empty = spark.createDataFrame([], "url string, score double")
-        for url in seeds:
-            exists = spark.catalog.tableExists(merged)
-            from flink_crawler_spark.operators.state_table import get_state_now_ms, get_state_tick
+        from flink_crawler_spark.operators.state_table import get_state_marker
 
-            tick = get_state_tick(spark, merged) if exists else 0
-            now = get_state_now_ms(spark, merged) if exists else start_ms
+        for url in seeds:
+            m = get_state_marker(spark, merged)
+            tick, now = (m.tick, m.clock) if m else (0, start_ms)
             batch = spark.createDataFrame([(url, None)], "url string, score double")
             _ingest_by_full_merge(spark, batch, merged, now_ms=now, buckets=4)
             crawl(
@@ -357,5 +365,4 @@ def test_streamed_log_mode_crawl_equals_ingest_then_crawl(spark, tmp_path):
         assert got["http://p3.com/"]["status"] == "FETCHED"
     finally:
         for t_ in (streamed, merged):
-            for s_ in ("", "__old", "__staging"):
-                spark.sql(f"DROP TABLE IF EXISTS {t_}{s_}")
+            _drop(spark, t_)
