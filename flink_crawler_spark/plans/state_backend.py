@@ -21,12 +21,12 @@ two backends, once per crawl, from the ``CrawlConfig`` fields:
 from it. Either resumes in a new process from the commit marker.
 
 Every backend offers what the crawl loop and the streaming shell do with
-state: ``open`` (resume: state, tick, clock — or None), ``marker`` (the
-commit marker, no state read), ``seed`` (the tick-0 state),
-``frontier`` (select the tick's frontier from the state), ``advance``
-(merge one tick's updates and persist the tick), ``close`` (the stats
-entries still owed when the loop ends) and ``ingest`` (one streamed
-seed micro-batch; the log backend only).
+state: ``open`` (resume: state, tick, clock — or None), ``seed`` (the
+tick-0 state), ``frontier`` (select the tick's frontier from the
+state), ``advance`` (merge one tick's updates and persist the tick) and
+``close`` (the stats entries still owed when the loop ends). The log
+backend adds ``marker`` (the commit marker, no state read) and
+``ingest`` (one streamed seed micro-batch).
 
 The two real differences between the backends:
 
@@ -155,10 +155,6 @@ class _MemoryBackend:
             aggs.append(F.min(F.when(F.col("status") == "FETCHED", F.col("next_fetch_time"))).alias("__min_nft"))
         return aggs
 
-    def marker(self) -> Marker | None:
-        """The commit marker of the durable state, None when there is none."""
-        return None
-
     def open(self, marker: Marker | None = None) -> tuple[DataFrame, int, int | None] | None:
         """(state, tick, clock) to resume from, None for a fresh crawl;
         ``marker`` when the caller has just read it. The clock is None
@@ -243,6 +239,7 @@ class _LogBackend(_MemoryBackend):
         self._pending: dict | None = None  # the tick whose counts have not arrived
 
     def marker(self) -> Marker | None:
+        """The commit marker of the log, None when there is none."""
         self.m = get_state_marker(self.spark, self.table)
         return self.m
 
