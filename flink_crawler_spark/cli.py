@@ -185,11 +185,8 @@ def main(argv: list[str] | None = None) -> int:
         trace=False,
         state_dir=args.checkpointdir,
         max_content_size=args.maxcontentsize,
-        # content sinks need the accumulated parse output; without this a
-        # >50-tick crawl auto-enables compaction, keep_parsed defaults
-        # off, res.parsed is None, and the explicitly requested sinks
-        # below would be skipped silently
-        keep_parsed=bool(args.textcontentfile or args.warccontentpath) or None,
+        # the content sinks below read the accumulated parse output
+        keep_parsed=bool(args.textcontentfile or args.warccontentpath),
     )
     t0 = time.time()
     res = crawl(

@@ -42,7 +42,7 @@ import time
 from dataclasses import dataclass, field
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.urls import (
@@ -77,6 +77,8 @@ from ..operators.robots import (
 )
 from .state_backend import state_backend
 
+DOMAIN_SCORE_WINDOW = 10  # G1 moving-average window: the last N page scores per domain
+
 
 @dataclass
 class CrawlConfig:
@@ -100,7 +102,6 @@ class CrawlConfig:
     single_domain: str | None = None  # -singledomain (PLD-restricted crawl)
     html_only: bool = False  # -htmlonly (mime filter before parse)
     domain_score_budget: int | None = None  # focused feedback: per-tick URL budget
-    domain_score_window: int = 10  # G1 moving-average window size
     max_content_size: int = 1 << 20  # -maxcontentsize (body truncation)
     parser: str = "regex"  # BasePageParser slot: "regex" (codegen) | "tree" (HTML parser)
     # Shuffle/exchange partition count scoped to the loop (None = leave
@@ -131,25 +132,10 @@ class CrawlConfig:
     state_table: str | None = None  # exclusive with state_dir
     state_buckets: int = 64  # physical layout constant — size for END state
     state_log_every: int | None = None
-    # Long-crawl lineage bounding. The loop accumulates per-tick trace /
-    # parsed / domain-score frames; left lazy, each holds a reference to
-    # that tick's checkpointed state (or, with a durable state, to a
-    # base that a later compaction sweeps away), so a
-    # 1,000-tick continuous crawl — the reference's operating mode,
-    # CrawlTopologyBuilder.java:250-466 — grows memory and plan-analysis
-    # cost without bound. With compaction ON, each tick folds its
-    # history into small eagerly-checkpointed frames (one tiny extra job
-    # per tick) and per-tick cost stays flat. None = auto: on when the
-    # state is durable (state_table or state_dir; required there: a new
-    # base evicts the caches and its sweep deletes the files lazy frames
-    # read) or the crawl is long (max_ticks > 50); off for short bench
-    # loops where the extra per-tick job costs more than it saves.
-    compact_history: bool | None = None
-    keep_parsed: bool | None = None  # accumulate full parse output across
-    # ticks (res.parsed). None = auto: off under compaction (a
-    # continuous crawl streams parse output to sinks instead of
-    # accumulating it; eagerly materializing full parse every tick
-    # defeats the pruned-projection hot path), on otherwise.
+    # accumulate the full parse output across ticks (res.parsed; the
+    # CLI's content sinks read it). Off, a tick builds only the pruned
+    # outlink projection its own job consumes.
+    keep_parsed: bool = False
 
     def __post_init__(self) -> None:
         # the frontier inlines the threshold into SQL text, where inf/nan
@@ -191,6 +177,13 @@ def clean_urls(
     if single_domain is not None:
         df = df.filter(F.col("pld") == single_domain.lower())
     return df
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def seeds_to_state(clean: DataFrame, *, now_ms: int) -> DataFrame:
@@ -316,19 +309,10 @@ def _crawl_body(
             "crawl_delay_ms long, sitemaps array<string>"
         )
 
-    compact = cfg.compact_history
-    if compact is None:
-        compact = backend.evicts_caches or cfg.max_ticks > 50
-    keep_parsed = cfg.keep_parsed
-    if keep_parsed is None:
-        keep_parsed = not compact
-    # without compaction the moving-average history re-reads each tick's
-    # parsed_slim on every later tick — those persists are freed at exit
-    keep_slim = cfg.domain_score_budget is not None and not compact
     trace_frames: list[DataFrame] = []
     parsed_frames: list[DataFrame] = []
-    domain_score_hist: list[DataFrame] = []  # (pld, seq, score) per tick
-    budget_slim_frames: list[DataFrame] = []  # budget-mode persists to free
+    # (pld, seq, score): the newest DOMAIN_SCORE_WINDOW scores per pld
+    score_hist: DataFrame | None = None
     stats: list[dict] = []
 
     def record(tick: int, operator: str, df: DataFrame, url_col: str = "url"):
@@ -383,71 +367,47 @@ def _crawl_body(
             ),
         )
 
-    def fold_tick_history(tick_mark: int) -> None:
-        # ---- history compaction (long-crawl flat-cost path) ----
-        if cfg.domain_score_budget is not None and compact and domain_score_hist:
-            # fold the score history to the newest N scores per pld —
-            # ONE small checkpointed frame, so the quota plan and the
-            # frames it holds do not grow with tick count
-            from pyspark.sql import Window
-
-            hist = domain_score_hist[0]
-            for h in domain_score_hist[1:]:
-                hist = hist.unionByName(h)
-            w = Window.partitionBy("pld").orderBy(
-                F.col("seq").desc(), F.col("score")
-            )
-            folded = (
+    def fold_tick_history(tick_mark: int, parsed: DataFrame | None, scores: DataFrame | None) -> None:
+        # Every tick checkpoints its history — its trace slice, its parse
+        # output and the score window — while its caches are still live:
+        # one small eager job each, so a later read never re-runs the
+        # tick (the fetcher included), and neither the history's plans
+        # nor the frames they hold grow with the tick count. A durable
+        # state needs it too: a new base evicts the caches, and its sweep
+        # deletes the files a lazy frame would read.
+        nonlocal score_hist
+        if len(trace_frames) > tick_mark:
+            chunk = _union_all(trace_frames[tick_mark:])
+            del trace_frames[tick_mark:]
+            trace_frames.append(chunk.localCheckpoint(eager=True))
+        if parsed is not None:
+            parsed_frames.append(parsed.localCheckpoint(eager=True))
+        if scores is not None:
+            # G1: the mean of the last N scores per domain (a count window
+            # over arrival order — MovingAverageAccumulator semantics)
+            hist = scores if score_hist is None else score_hist.unionByName(scores)
+            w = Window.partitionBy("pld").orderBy(F.col("seq").desc(), F.col("score"))
+            score_hist = (
                 hist.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= cfg.domain_score_window)
+                .filter(F.col("__rn") <= DOMAIN_SCORE_WINDOW)
                 .drop("__rn")
                 .localCheckpoint(eager=True)
             )
-            domain_score_hist.clear()
-            domain_score_hist.append(folded)
-        if compact and cfg.trace and len(trace_frames) > tick_mark:
-            # fold this tick's trace slice into one checkpointed chunk
-            # (reads only this tick's caches, which are still live)
-            chunk = trace_frames[tick_mark]
-            for f in trace_frames[tick_mark + 1 :]:
-                chunk = chunk.unionByName(f)
-            del trace_frames[tick_mark:]
-            trace_frames.append(chunk.localCheckpoint(eager=True))
 
     deadline = time.time() + cfg.max_duration_sec
     tick = start_tick
     while tick < cfg.max_ticks and time.time() < deadline:
         tick += 1
         now_ms += cfg.tick_ms
-        tick_mark = len(trace_frames)  # compaction: this tick's trace slice
+        tick_mark = len(trace_frames)  # this tick's trace slice starts here
 
         # With a domain_score_budget, frontier admission is quota'd by the
         # per-domain moving-average score — the domain-score feedback edge
         # (MovingAverageFunction -> UrlDBFunction timer policy, CTB:419-423)
-        if cfg.domain_score_budget is not None and domain_score_hist:
-            from pyspark.sql import Window
-
+        if cfg.domain_score_budget is not None and score_hist is not None:
             from ..operators.frontier import select_frontier_with_quotas
 
-            hist = domain_score_hist[0]
-            for h in domain_score_hist[1:]:
-                hist = hist.unionByName(h)
-            if compact:
-                # history is already folded to the newest N scores per
-                # pld (one checkpointed frame) — the mean is a plain agg
-                avg = hist.groupBy("pld").agg(F.avg("score").alias("score"))
-            else:
-                # G1: mean of the last N scores per domain (count window
-                # over arrival order — MovingAverageAccumulator semantics)
-                w = Window.partitionBy("pld").orderBy(
-                    F.col("seq").desc(), F.col("score")
-                )
-                avg = (
-                    hist.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= cfg.domain_score_window)
-                    .groupBy("pld")
-                    .agg(F.avg("score").alias("score"))
-                )
+            avg = score_hist.groupBy("pld").agg(F.avg("score").alias("score"))
             select = partial(
                 select_frontier_with_quotas,
                 domain_scores=avg,
@@ -549,16 +509,13 @@ def _crawl_body(
             record(tick, "fetched", results.where("status = 'FETCHED'"))
         status_updates = fetch_status_updates(results)
 
-        # U1: parse + side outputs (persisted: 4 outputs off one frame,
-        # and parsed_frames are unioned after the loop)
-        # Hot path: the tick job only consumes (url, pld, score, outlinks)
-        # — persist a PRUNED projection so the language profiler and
-        # title/body-text regexes never compute (or even analyze, in the
-        # regex-parser mode) inside the loop. The FULL parse plan is only
-        # constructed at all when something consumes it (keep_parsed, or
-        # the tree parser whose slim projection derives from it);
-        # parsed_output keeps it lazy: it recomputes from the
-        # deterministic fixture only if the caller reads res.parsed.
+        # U1: parse + side outputs. Hot path: the tick job only consumes
+        # (url, pld, score, outlinks) — persist a PRUNED projection so the
+        # language profiler and title/body-text regexes never compute (or
+        # even analyze, in the regex-parser mode) inside the loop. The
+        # FULL parse plan is only built when something consumes it
+        # (keep_parsed, or the tree parser whose slim projection derives
+        # from it).
         parsed = None
         if cfg.parser == "tree":
             from ..operators.parse import parse_pages_html
@@ -576,26 +533,21 @@ def _crawl_body(
                 results, scorer=scorer, max_outlinks=cfg.max_outlinks
             ).persist()
         record(tick, "parsed", parsed_slim)
-        if keep_parsed:
+        parsed_out = None
+        if cfg.keep_parsed:
             if parsed is None:
                 parsed = parse_pages(
                     results, scorer=scorer, max_outlinks=cfg.max_outlinks
                 )
-            pf = parsed_output(parsed)
-            if compact:
-                # eager: a lazy frame would reference this tick's caches
-                # / state-table version, which do not survive the tick
-                pf = pf.localCheckpoint(eager=True)
-            parsed_frames.append(pf)
+            parsed_out = parsed_output(parsed)
         outlinks = outlink_output(parsed_slim)
         # G1 feedback: per-page domain scores enter the moving-average
         # history that drives next tick's quotas (CTB:419-423 loop);
         # only tracked in budget mode — nothing reads it otherwise
+        scores = None
         if cfg.domain_score_budget is not None:
-            domain_score_hist.append(
-                domain_score_output(parsed_slim).withColumn(
-                    "seq", F.lit(tick).cast("long")
-                )
+            scores = domain_score_output(parsed_slim).withColumn(
+                "seq", F.lit(tick).cast("long")
             )
 
         # U2: sitemap entries — robots-advertised sitemaps resolve on the
@@ -624,16 +576,14 @@ def _crawl_body(
         # and persists the tick; it counts the frontier and runs the
         # history fold while this tick's caches are still live, then
         # releases them
-        if keep_slim:
-            budget_slim_frames.append(parsed_slim)
         step = backend.advance(
             crawl_state,
             updates,
             tick=tick,
             now_ms=now_ms,
             frontier=frontier,
-            caches=[frontier, results] + ([] if keep_slim else [parsed_slim]),
-            fold=partial(fold_tick_history, tick_mark),
+            caches=[frontier, results, parsed_slim],
+            fold=partial(fold_tick_history, tick_mark, parsed_out, scores),
         )
         stats += step.stats
         if step.state is None:
@@ -655,31 +605,15 @@ def _crawl_body(
             # on every non-terminal tick
             break
         if step.done:
-            break  # without stats, the empty-frontier check exits one tick later
+            break  # no UNFETCHED row is left: no later tick can admit
 
     stats += backend.close(crawl_state)
 
-    # budget-mode (non-compact) parsed_slim persists are read by every
-    # later tick's moving-average plan — release them now that the loop
-    # is done (previously they leaked for the session's lifetime)
-    for f in budget_slim_frames:
-        f.unpersist()
-
-    parsed_all = None
-    if parsed_frames:
-        parsed_all = parsed_frames[0]
-        for f in parsed_frames[1:]:
-            parsed_all = parsed_all.unionByName(f)
-        parsed_all = parsed_all.dropDuplicates(["url"])
-
-    trace = None
-    if trace_frames:
-        trace = trace_frames[0]
-        for f in trace_frames[1:]:
-            trace = trace.unionByName(f)
+    parsed_all = _union_all(parsed_frames).dropDuplicates(["url"]) if parsed_frames else None
+    trace = _union_all(trace_frames) if trace_frames else None
 
     if pages is not None:
-        pages.unpersist()  # late trace/parsed actions recompute deterministically
+        pages.unpersist()
     return CrawlResult(
         crawl_state=crawl_state, parsed=parsed_all, trace=trace, ticks=tick, stats=stats
     )

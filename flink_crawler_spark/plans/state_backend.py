@@ -28,20 +28,26 @@ state), ``advance`` (merge one tick's updates and persist the tick) and
 backend adds ``marker`` (the commit marker, no state read) and
 ``ingest`` (one streamed seed micro-batch).
 
-The two real differences between the backends:
+Both run the loop's history fold (``fold``: it checkpoints the tick's
+trace slice, parse output and score window) while the tick's caches
+are live, and both end a crawl the same tick whether or not
+``collect_stats`` is set: the UNFETCHED counter always rides the tick's
+one Observation, and a crawl with no UNFETCHED row left (refetch off)
+stops. The two real differences between the backends:
 
   * Cache consumption. A new base re-points the table, which evicts
     every cached frame derived from it, so the log backend counts the
-    frontier and folds the tick's history (``fold``) BEFORE it writes;
-    that count job materializes the tick's caches and the write reuses
-    them. The in-memory backend runs its checkpoint job first (it
-    materializes the caches) and consumes them after it.
-  * Stats lag. The in-memory backend's status counters ride its
+    frontier and folds BEFORE it writes; that count job materializes
+    the tick's caches and the write reuses them. The in-memory backend
+    runs its checkpoint job first (it materializes the caches) and
+    consumes them after it.
+  * Counter lag. The in-memory backend's status counters ride its
     checkpoint job, giving post-merge counts the same tick. The log
     backend has no full-state write, so its counters ride the next
-    tick's frontier scan of the state view: each tick's entry is
+    tick's frontier scan of the state view: each tick's stats entry is
     finalized one tick in arrears, and the last one by a single
-    aggregation when the loop ends.
+    aggregation when the loop ends; a tick that finds no UNFETCHED row
+    and admits nothing does not run.
 """
 
 from __future__ import annotations
@@ -86,12 +92,8 @@ def state_backend(spark: SparkSession, cfg) -> _MemoryBackend:
         if cfg.state_log_every is not None:
             raise ValueError("state_log_every requires state_table or state_dir")
         return _MemoryBackend(spark, cfg)
-    if cfg.compact_history is False:
-        # not a preference for a durable state: lazy trace/parsed frames
-        # would reference bases whose files a later compaction deletes —
-        # evaluating them later crashes or reads wrong data
-        raise ValueError("state_table and state_dir require compact_history (got False)")
     return _LogBackend(spark, cfg)
+
 
 def _observed_count(obs, *, wait_s: float = 2.0) -> int | None:
     """The first metric of a one-count Observation, or None when it has
@@ -131,11 +133,6 @@ def _release(caches: list[DataFrame]) -> None:
 class _MemoryBackend:
     """The state lives in localCheckpoint blocks; nothing is durable."""
 
-    # the state is a table whose new bases evict cached frames and whose
-    # sweeps delete the files older lazy frames read (the loop then
-    # compacts history)
-    evicts_caches = False
-
     def __init__(self, spark: SparkSession, cfg) -> None:
         self.spark, self.cfg = spark, cfg
         self._front_obs: Observation | None = None
@@ -144,11 +141,11 @@ class _MemoryBackend:
     def aggs(self) -> list:
         """The status counters and the refetch due-timer aggregate: the
         Flink-counter surface (StatusCounterFunction / DEFAULT_METRIC
-        gauges) at zero extra actions. Built once; an Observation is
+        gauges) at zero extra actions. Without stats only the UNFETCHED
+        counter, which ends the crawl. Built once; an Observation is
         made per tick."""
-        aggs = []
-        if self.cfg.collect_stats:
-            aggs += [F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s) for s in FETCH_STATUSES]
+        statuses = FETCH_STATUSES if self.cfg.collect_stats else ["UNFETCHED"]
+        aggs = [F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s) for s in statuses]
         if self.cfg.refetch:
             # refetch-mode termination needs the earliest due time among
             # tracked FETCHED rows — rides the same job
@@ -191,10 +188,8 @@ class _MemoryBackend:
         ``frontier`` is the tick's persisted frontier, ``caches`` the
         tick's persisted frames (released here once consumed), ``fold``
         the loop's history fold, which still reads them."""
-        obs = Observation(f"state_t{tick}") if self.aggs else None
-        merged = merge_updates(state, updates)
-        if obs is not None:
-            merged = merged.observe(obs, *self.aggs)
+        obs = Observation(f"state_t{tick}")
+        merged = merge_updates(state, updates).observe(obs, *self.aggs)
         # localCheckpoint truncates lineage — without it the state plan
         # grows every tick. This one job also materializes the caches.
         new_state = merged.localCheckpoint(eager=True)
@@ -203,19 +198,21 @@ class _MemoryBackend:
         n = (self._front_obs is not None and _observed_count(self._front_obs)) or frontier.count()
         fold()
         _release(caches)
+        metrics = dict(obs.get)
+        sleep_ms = self._sleep_ms(tick, now_ms, n, metrics)
+        done = self._done(metrics)
         # a tick that admits nothing is the terminal one and records no
         # stats entry
-        metrics = dict(obs.get) if obs is not None else {}
-        sleep_ms = self._sleep_ms(tick, now_ms, n, metrics)
         if not (self.cfg.collect_stats and n > 0):
-            return Tick(new_state, n, sleep_ms, [], False)
-        counts = _obs_counts(metrics)
-        # frontier admission is UNFETCHED-only (FetchQueue semantics), so
-        # none left means no later tick can admit; in refetch mode FETCHED
-        # rows re-enter when due and the empty frontier ends the crawl
-        done = counts.get("UNFETCHED", 0) == 0 and not self.cfg.refetch
-        entry = {"tick": tick, "frontier": n, "status_counts": counts}
+            return Tick(new_state, n, sleep_ms, [], done)
+        entry = {"tick": tick, "frontier": n, "status_counts": _obs_counts(metrics)}
         return Tick(new_state, n, sleep_ms, [entry], done)
+
+    def _done(self, metrics: dict) -> bool:
+        """Frontier admission is UNFETCHED-only (FetchQueue semantics), so
+        none left means no later tick can admit; in refetch mode FETCHED
+        rows re-enter when due and the empty frontier ends the crawl."""
+        return not self.cfg.refetch and metrics.get("UNFETCHED") in (None, 0)
 
     def close(self, state: DataFrame) -> list[dict]:
         """Stats entries still owed when the loop ends."""
@@ -227,8 +224,6 @@ class _LogBackend(_MemoryBackend):
     delta-sized directory and commits, reads see base ⋈ merge(deltas), and
     every ``state_log_every`` ticks compaction folds the deltas into a new
     base."""
-
-    evicts_caches = True
 
     def __init__(self, spark: SparkSession, cfg) -> None:
         super().__init__(spark, cfg)
@@ -260,27 +255,23 @@ class _LogBackend(_MemoryBackend):
         # due-timer is only read on empty-frontier ticks, where the merge
         # is an identity and pre == post — so a sleep is known before
         # the tick commits.
-        self._state_obs = None
-        if self.aggs:
-            self._state_obs = Observation(f"state_scan_t{tick}")
-            state = state.observe(self._state_obs, *self.aggs)
-        return select(state)
+        self._state_obs = Observation(f"state_scan_t{tick}")
+        return select(state.observe(self._state_obs, *self.aggs))
 
     def advance(self, state, updates, *, tick, now_ms, frontier, caches, fold) -> Tick:
         n = frontier.count()  # fires the counters of the state-view scan
         fold()
-        metrics = dict(self._state_obs.get) if self._state_obs is not None else {}
+        metrics = dict(self._state_obs.get)
         stats = []
-        if self.cfg.collect_stats:
-            if self._pending is not None:
-                stats.append({**self._pending, "status_counts": _obs_counts(metrics)})
-                self._pending = None
-            if not self.cfg.refetch and n == 0 and metrics.get("UNFETCHED") in (None, 0):
-                # no UNFETCHED row is left, so no tick can admit again: skip
-                # this tick's empty delta and marker advance; the previous
-                # tick was the last one that worked
-                _release(caches)
-                return Tick(None, n, None, stats, True)
+        if self._pending is not None:
+            stats.append({**self._pending, "status_counts": _obs_counts(metrics)})
+            self._pending = None
+        if n == 0 and self._done(metrics):
+            # no UNFETCHED row is left, so no tick can admit again: skip
+            # this tick's empty delta and marker advance; the previous
+            # tick was the last one that worked
+            _release(caches)
+            return Tick(None, n, None, stats, True)
         # a sleeping tick commits the clock it sleeps to: a crawl resumed
         # after it keeps the jump instead of deriving it again
         sleep_ms = self._sleep_ms(tick, now_ms, n, metrics)

@@ -76,16 +76,17 @@ from . import pipelineq32  # noqa: E402,F401
 # multimodal, sketch, sources).  Everything else follows in registration
 # order and is still verified by bench + pytest.
 PRIORITY_WINDOW = [
-    # --- durable-log rotation: stupid_backoff_score's joins lost their
-    # forced broadcast hints (the planner sizes c2/c1/nd from their
-    # checkpoints); the crawl loop's durable state is one bucketed state
-    # log with a commit marker, bucketed_state_merge writes and commits a
-    # new base through it, and crawl_reachability / _rcte run the loop.
-    # Value-oracled at sf0.001 + sf0.01.
-    "stupid_backoff_score",       # planner-sized broadcasts
-    "bucketed_state_merge",       # tick_merge_bucketed: base + commit
+    # --- history-fold rotation: the crawl loop has one history path
+    # (every tick checkpoints its trace/parse/score history) and ends the
+    # same tick with or without stats; bucketed_state_merge writes one
+    # fixed state root. Value-oracled at sf0.001 + sf0.01.
     "crawl_reachability",         # the crawl loop
     "crawl_reachability_rcte",    # the crawl loop's recursive-CTE twin
+    "bucketed_state_merge",       # one fixed root, tick_merge_bucketed
+    # --- durable-log rotation: stupid_backoff_score's joins lost their
+    # forced broadcast hints (the planner sizes c2/c1/nd from their
+    # checkpoints). Value-oracled at sf0.001 + sf0.01.
+    "stupid_backoff_score",       # planner-sized broadcasts
     # --- codegen rotation: the language detector's script label is built
     # from count columns and its routing class rides in the trigram join
     # key, so every stage compiles under whole-stage codegen (it fell back

@@ -520,6 +520,9 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+BUCKETED_STATE_TABLE = "crawl_state_q"
+
+
 @register(
     "bucketed_state_merge",
     oracle=f"""
@@ -538,8 +541,6 @@ def bucketed_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over ALL observations — which is exactly the oracle
     (crawl_merge_lattice's). Value-checks merge_updates_join, the
     bucketed layout, and a new base's commit end-to-end."""
-    import uuid
-
     from ..operators.state_table import save_bucketed_state, tick_merge_bucketed
 
     from ..operators import ensure_parallelism
@@ -551,9 +552,11 @@ def bucketed_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = ensure_parallelism(crawl_obs(spark, sf_dir)).localCheckpoint(eager=True)
     half = F.pmod(F.col("status_time"), F.lit(2)) == 0
     state0 = merge_crawl_state(obs.filter(half))
-    tbl = "crawl_state_q_" + uuid.uuid4().hex[:8]
-    save_bucketed_state(state0, tbl, buckets=8)
-    new_state = tick_merge_bucketed(spark, tbl, obs.filter(~half))
+    # one fixed root: each call's delete-first save replaces the last
+    # call's state instead of leaving a new root behind (so a result is
+    # collected before the next call)
+    save_bucketed_state(state0, BUCKETED_STATE_TABLE, buckets=8)
+    new_state = tick_merge_bucketed(spark, BUCKETED_STATE_TABLE, obs.filter(~half))
     return new_state.select(
         "url", "pld", "status", "status_time", F.round("score", 6).alias("score"), "next_fetch_time"
     )

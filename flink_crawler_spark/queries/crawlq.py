@@ -117,13 +117,6 @@ def crawl_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         force_crawl_delay_ms=0,
         trace=False,
         collect_stats=False,
-        # r12 (guide §1.2): this query consumes ONLY res.crawl_state, but
-        # keep_parsed auto-defaults True for short crawls, so every tick
-        # built the FULL parse Column tree (charset sniff + language
-        # profile + title/body regexes) it never evaluates — measured
-        # ~2.1 s of pure py4j plan construction per run (cProfile:
-        # parse_pages 6 calls / 2.14 s of the 8.4 s sf0.001 fixed cost).
-        keep_parsed=False,
         # size the loop's exchanges to the graph: ~25k URLs per shuffle
         # partition, floor 4 — results are partition-independent (oracle
         # pins them); the default-parallelism floor was 40% of this

@@ -614,3 +614,26 @@ def test_pending_seeds_are_absorbed_exactly_once(spark, monkeypatch, mode):
         ]  # everything folded was swept
     finally:
         _drop(spark, table)
+
+
+def test_bucketed_state_merge_query_keeps_one_state_root(spark, sf_dir):
+    """Each run of the ``bucketed_state_merge`` query replaces the one
+    state root it owns instead of leaving a new root behind in the
+    warehouse, and a second run gives the same rows."""
+    import glob
+    import os
+
+    from flink_crawler_spark.queries.core import BUCKETED_STATE_TABLE, bucketed_state_merge
+
+    def roots():
+        return set(glob.glob(_log_dir(spark, "crawl_state_q*")))
+
+    before = roots()
+    try:
+        first = sorted(tuple(r) for r in bucketed_state_merge(spark, sf_dir).collect())
+        second = sorted(tuple(r) for r in bucketed_state_merge(spark, sf_dir).collect())
+        assert roots() == before | {_log_dir(spark, BUCKETED_STATE_TABLE)}
+        assert os.path.isdir(_log_dir(spark, BUCKETED_STATE_TABLE))
+        assert first and second == first
+    finally:
+        _drop(spark, BUCKETED_STATE_TABLE)

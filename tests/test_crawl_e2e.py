@@ -57,7 +57,7 @@ def state_map(result: CrawlResult) -> dict[str, dict]:
 
 def test_broad_crawl_reaches_every_page(spark, simple_graph):
     seeds = spark.createDataFrame([(D("domain1.com"), 1.0)], ["url", "score"])
-    res = crawl(spark, seeds, pages=simple_graph, config=CrawlConfig(max_ticks=8))
+    res = crawl(spark, seeds, pages=simple_graph, config=CrawlConfig(max_ticks=8, keep_parsed=True))
     st = state_map(res)
     for page in [
         D("domain1.com"),
@@ -419,3 +419,40 @@ def test_frontier_observation_read_is_bounded(spark):
     fired = Observation("fired")
     spark.range(7).observe(fired, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     assert _observed_count(fired) == 7
+
+
+def test_reading_the_history_refetches_nothing(spark):
+    """Every tick checkpoints its trace slice and parse output while its
+    caches are live, so reading ``res.parsed`` or ``res.trace`` after the
+    crawl runs no fetch again (a live crawl would re-download its pages
+    for each content sink)."""
+    from flink_crawler_spark.operators.fetch import mock_fetch
+
+    adjacency = {
+        D("a.com"): [D("a.com", "1"), D("b.com")],
+        D("a.com", "1"): [D("b.com", "2")],
+        D("b.com"): [D("b.com", "2")],
+        D("b.com", "2"): [],
+    }
+    pages = render_pages(web_graph_from_adjacency(spark, adjacency)).localCheckpoint(eager=True)
+    fetched = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            fetched.add(len(b))
+            yield b
+
+    def counting_fetch(to_fetch, now_ms):
+        results = mock_fetch(to_fetch, pages, now_ms=now_ms)
+        return results.mapInPandas(count_rows, results.schema)
+
+    seeds = spark.createDataFrame([(D("a.com"), 1.0)], ["url", "score"])
+    res = crawl(
+        spark, seeds, fetch_fn=counting_fetch,
+        config=CrawlConfig(max_ticks=8, trace=True, keep_parsed=True),
+    )
+    assert fetched.value == 4  # each page fetched once
+    assert res.parsed.count() == 4
+    assert fetched.value == 4  # the parse output was read from its checkpoints
+    assert res.trace.count() > 0
+    assert fetched.value == 4  # and so was the trace

@@ -236,7 +236,7 @@ def test_live_crawl_matches_mock_crawl_state(spark, server):
     mock-join crawl over the identical page bytes."""
     base = server.base
     seeds = spark.createDataFrame([(base + "/", 1.0)], ["url", "score"])
-    cfg = CrawlConfig(max_ticks=6, default_crawl_delay_ms=100)
+    cfg = CrawlConfig(max_ticks=6, default_crawl_delay_ms=100, keep_parsed=True)
 
     live_rules = _live_rules(spark, base).drop(
         "fetch_status", "fetched_at", "expires_at"

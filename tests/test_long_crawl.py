@@ -1,13 +1,14 @@
-"""Long-crawl flat-cost regression: compaction keeps per-tick time flat.
+"""Long-crawl flat-cost regression: the history fold keeps per-tick time flat.
 
 The reference operates as ONE always-on job (CrawlTopologyBuilder.java:
-250-466); the batch-loop engine must sustain 1,000+ ticks. Without
-history compaction the budget-mode tick cost grows without bound
-(measured: 1.9s -> 32s by tick 5, driver-JVM OOM before tick 30); with
-compact_history the 200-tick A/B in SCALE.md holds flat. This test pins
-the compact path at a CI-sized tick count with a generous flatness
-bound — the non-compact failure mode it guards against is a >10x blowup,
-not a 20% drift.
+250-466); the batch-loop engine must sustain 1,000+ ticks. The crawl
+loop has one history path: every tick checkpoints its trace slice,
+parse output and score window, so the budget-mode tick cost does not
+grow with the tick count (a lazy history measured 1.9s -> 32s by tick
+5 and a driver-JVM OOM before tick 30; the folded one held flat over
+200 ticks, SCALE.md). This test pins that path at a CI-sized tick
+count with a generous flatness bound — the failure mode it guards
+against is a >10x blowup, not a 20% drift.
 """
 
 from __future__ import annotations
@@ -40,7 +41,6 @@ def test_compact_budget_crawl_holds_flat_tick_cost(spark):
     cfg = CrawlConfig(
         max_ticks=ticks,
         domain_score_budget=domains,
-        compact_history=True,
         max_queue_size=None,
         max_duration_sec=1800,
     )

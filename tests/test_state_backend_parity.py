@@ -5,8 +5,9 @@ at a ``state_dir`` or at ``<warehouse>/<state_table>``, compacting every
 4 ticks (the default) or every 3 (``state_log``) — must crawl the same
 graph to the same final state, the same ``res.ticks`` and the same
 per-tick ``res.stats`` — with the status counters on and off (stats on,
-the log finalizes each tick's counts one tick in arrears; off, every
-mode stops one tick later on the empty frontier). A corrupt commit
+the log finalizes each tick's counts one tick in arrears; off, no stats
+entry, and every mode stops the same tick, when no UNFETCHED row is
+left). A corrupt commit
 marker, and state in an older format, are rejected with a clear error
 by the loop's resume and by the streaming seed ingest; a streamed
 micro-batch reads the marker once.
@@ -30,9 +31,9 @@ ADJACENCY = {
     "http://l1.com/c": [],
 }
 MODES = ["memory", "state_dir", "state_table", "state_log"]
-# ticks on this graph: stats on stop when no UNFETCHED row is left; stats
-# off stop one tick later, on the first empty frontier
-EXPECTED_TICKS = {True: 4, False: 5}
+# ticks on this graph: with stats on or off the crawl stops when no
+# UNFETCHED row is left
+EXPECTED_TICKS = {True: 4, False: 4}
 
 
 @pytest.fixture(scope="module")
